@@ -258,8 +258,9 @@ def cosine_pairs_lsh(
     work). Pair set and scores are IDENTICAL to the distributed
     broadcast route: same planes, same sign rule, same unordered-pair
     dedup across tables, same einsum/np.round scoring (CI-pinned,
-    tests/test_fanout.py). 0 disables; past the bound (real corpora)
-    the distributed pipeline engages unchanged.
+    tests/test_ext.py::test_cosine_pairs_lsh_driver_route_parity). 0
+    disables; past the bound (real corpora) the distributed pipeline
+    engages unchanged.
     """
     # resolve the verify strategy FIRST so the broadcast path needs just
     # one driver job (the toPandas collect yields count, dim, and the

@@ -459,6 +459,17 @@ def length_outlier_filter(
     return out.drop("_g") if group_col is None else out
 
 
+def _ordered_sum(values: Column) -> Column:
+    """Aggregate: the group's doubles added in ascending order. ``F.sum``
+    adds in the order rows reach the aggregate, which follows the
+    partitioning, so its last bits (and a top-k tie) changed with the
+    slot count; here equal multisets give equal bits, and the id breaks
+    the tie."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(values)), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
 def tfidf_topk(
     df: DataFrame,
     text_col: str,
@@ -479,7 +490,9 @@ def tfidf_topk(
     tokens, never the whole vocabulary. N (corpus size) and the per-term
     document frequencies ride a 1-row/|query|-row broadcast. Final
     top-k is orderBy+limit → TakeOrderedAndProject, no global sort.
-    Ties break on ascending id for determinism.
+    A document's terms are summed in a fixed order (``_ordered_sum``),
+    so the ranking does not depend on partitioning; ties break on
+    ascending id.
     """
     terms = [t.lower() for t in query_terms]
     toks = df.select(
@@ -507,7 +520,7 @@ def tfidf_topk(
     return (
         tf.join(F.broadcast(idf), "t")
         .groupBy(id_col)
-        .agg(F.sum(F.col("tf") * F.col("idf")).alias("score"))
+        .agg(_ordered_sum(F.col("tf") * F.col("idf")).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -537,7 +550,9 @@ def bm25_topk(
     1-row broadcast. The dl join keys on the ids of matching docs only —
     the tf side is a sliver, so AQE turns it into a broadcast hash join
     against the full-length table at scale. Final top-k is
-    orderBy+limit → TakeOrderedAndProject. Ties break on ascending id.
+    orderBy+limit → TakeOrderedAndProject. Terms are summed in a fixed
+    order (``_ordered_sum``), so the ranking does not depend on
+    partitioning; ties break on ascending id.
     """
     terms = [t.lower() for t in query_terms]
     lengths = df.select(
@@ -574,7 +589,7 @@ def bm25_topk(
         .crossJoin(F.broadcast(stats.select("avgdl")))
         .groupBy(id_col)
         .agg(
-            F.sum(
+            _ordered_sum(
                 F.col("idf")
                 * F.col("tf")
                 * (k1 + 1.0)

@@ -28,16 +28,18 @@ def ingest_bronze(
     string literal (``bronze_ingestion.py:28`` — note the reference keeps
     it string-typed) or ``current_date()`` (``api_bronze_ingestion.py:29``).
     """
-    out = (
-        df.withColumn("ingestion_timestamp", F.current_timestamp())
-        .withColumn("source_system", F.lit(source_system))
-        .withColumn("source_table", F.lit(source_table))
-    )
-    if ingestion_date is not None:
-        col = F.lit(ingestion_date)
-        if not date_as_string:
-            col = col.cast("date")
-        out = out.withColumn("ingestion_date", col)
+    if ingestion_date is None:
+        date = F.current_date()
     else:
-        out = out.withColumn("ingestion_date", F.current_date())
-    return out
+        date = F.lit(ingestion_date)
+        if not date_as_string:
+            date = date.cast("date")
+    # one projection: a single plan-analysis pass for all four columns
+    return df.withColumns(
+        {
+            "ingestion_timestamp": F.current_timestamp(),
+            "source_system": F.lit(source_system),
+            "source_table": F.lit(source_table),
+            "ingestion_date": date,
+        }
+    )

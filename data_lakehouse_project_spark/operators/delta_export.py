@@ -50,6 +50,7 @@ from urllib.parse import quote
 
 from pyspark.sql import SparkSession
 
+from ..session import PARQUET_CODEC
 from .dv import write_dv_file, z85_encode
 from .txnlog import (
     _file_stats,
@@ -127,7 +128,7 @@ def _rewrite_without_rows(src: str, dst: str,
     keep = np.ones(t.num_rows, dtype=bool)
     keep[np.asarray(drop_positions, dtype=np.int64)] = False
     os.makedirs(os.path.dirname(dst), exist_ok=True)
-    pq.write_table(t.filter(pa.array(keep)), dst)
+    pq.write_table(t.filter(pa.array(keep)), dst, compression=PARQUET_CODEC)
 
 
 def export_delta_snapshot(
@@ -1066,7 +1067,10 @@ def _write_classic_checkpoint(
         ),
     )
     name = f"{version:0{_VERSION_DIGITS}d}.checkpoint.parquet"
-    pq.write_table(table, os.path.join(target_path, LOG_DIR, name))
+    pq.write_table(
+        table, os.path.join(target_path, LOG_DIR, name),
+        compression=PARQUET_CODEC,
+    )
     with open(
         os.path.join(target_path, LOG_DIR, "_last_checkpoint"), "w"
     ) as fh:
@@ -1101,7 +1105,7 @@ def _write_v2_checkpoint(
     side_tbl = pa.Table.from_pylist(
         [{"add": a} for a in adds], schema=pa.schema([("add", add_t)])
     )
-    pq.write_table(side_tbl, side_path)
+    pq.write_table(side_tbl, side_path, compression=PARQUET_CODEC)
 
     cm_t = pa.struct([("version", pa.int64())])
     sc_t = pa.struct(
@@ -1138,6 +1142,8 @@ def _write_v2_checkpoint(
     name = (
         f"{version:0{_VERSION_DIGITS}d}.checkpoint.{_uuid.uuid4()}.parquet"
     )
-    pq.write_table(manifest, os.path.join(log_dir, name))
+    pq.write_table(
+        manifest, os.path.join(log_dir, name), compression=PARQUET_CODEC
+    )
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
         json.dump({"version": version, "size": len(rows)}, fh)

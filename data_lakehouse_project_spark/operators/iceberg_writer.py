@@ -43,6 +43,7 @@ from .concurrency import ConcurrentCommitError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import PARQUET_CODEC
 from .iceberg_export import (
     _AVRO_OF,
     _AvroWriter,
@@ -1066,6 +1067,7 @@ def _write_pos_delete_manifest(
             }
         ),
         del_path,
+        compression=PARQUET_CODEC,
     )
     meta_dir = os.path.join(table_path, "metadata")
     delete_manifest = os.path.join(

@@ -63,16 +63,23 @@ def quality_flag(rules: dict[str, Column]) -> Column:
 def transform_silver(df: DataFrame, spec: SilverSpec) -> DataFrame:
     """Apply a SilverSpec; pure DataFrame→DataFrame so Catalyst fuses it
     with the surrounding scan/write into one stage."""
-    out = df
+    # each step is one projection (one plan-analysis pass); a column's
+    # cast -> trim -> lower chain composes into one expression
+    fixes: dict[str, Column] = {}
     for column, dtype in spec.casts.items():
-        out = out.withColumn(column, F.col(column).cast(dtype))
+        fixes[column] = F.col(column).cast(dtype)
     for column in spec.trim_columns:
-        out = out.withColumn(column, F.trim(F.col(column)))
+        fixes[column] = F.trim(fixes.get(column, F.col(column)))
     for column in spec.lower_columns:
-        out = out.withColumn(column, F.lower(F.col(column)))
+        fixes[column] = F.lower(fixes.get(column, F.col(column)))
+    out = df.withColumns(fixes) if fixes else df
     if spec.drop_null_subset:
         out = out.na.drop(subset=spec.drop_null_subset)
     if spec.add_metadata:
-        out = out.withColumn("transformation_timestamp", F.current_timestamp())
-        out = out.withColumn("data_quality_check", quality_flag(spec.quality_rules))
+        out = out.withColumns(
+            {
+                "transformation_timestamp": F.current_timestamp(),
+                "data_quality_check": quality_flag(spec.quality_rules),
+            }
+        )
     return out

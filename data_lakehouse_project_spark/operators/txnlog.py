@@ -73,6 +73,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import PARQUET_CODEC
+
 LOG_DIR = "_delta_log"
 DV_DIR = "_dv"
 CDC_DIR = "_change_data"
@@ -717,7 +719,7 @@ class TxnTable:
         table = pa.Table.from_pylist(rows, schema=schema)
         log = _log_path(self.path)
         tmp = os.path.join(log, f".tmpdcp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
+        pq.write_table(table, tmp, compression=PARQUET_CODEC)
         os.replace(
             tmp,
             os.path.join(

@@ -16,7 +16,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from data_lakehouse_project_spark.operators.catalog import register_external_table
-from data_lakehouse_project_spark.operators.sinks import write_table
+from data_lakehouse_project_spark.operators.sinks import (
+    read_table,
+    resolve_format,
+    write_table,
+)
+from data_lakehouse_project_spark.operators.txnlog import TxnTable
 
 
 @dataclass
@@ -24,9 +29,15 @@ class Stage:
     """One medallion stage: transform, then optionally materialize.
 
     transform: pure DataFrame -> DataFrame (no actions inside)
-    path: when set, the stage's output is written (parquet/delta) and
-          re-read, creating a layer boundary exactly like the reference's
-          bronze/silver/gold writes.
+    path: when set, the stage's output is written (parquet/orc/json/csv,
+          delta or delta-lite) and read back, creating a layer boundary
+          exactly like the reference's bronze/silver/gold writes. The
+          read-back takes its schema from the write, not from the files:
+          data columns in written order, then ``partition_by`` columns,
+          which keep their written types.
+    register_as: (database, table) to register the written location in
+          the catalog; refused for ``delta-lite``, which has no catalog
+          source (read it with ``TxnTable(path).read``).
     """
 
     name: str
@@ -36,6 +47,13 @@ class Stage:
     partition_by: list[str] = field(default_factory=list)
     single_file: bool = False
     register_as: tuple[str, str] | None = None  # (database, table)
+
+    def __post_init__(self) -> None:
+        if self.register_as and self.fmt == "delta-lite":
+            raise ValueError(
+                f"stage {self.name!r}: register_as is not supported for "
+                "fmt='delta-lite' (the catalog has no delta-lite source)"
+            )
 
 
 def _has_success_marker(spark: SparkSession, path: str) -> bool:
@@ -49,11 +67,23 @@ def _has_success_marker(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def _committed(spark: SparkSession, stage: Stage) -> bool:
+    """True when the stage's target holds a committed write: a
+    ``delta-lite`` table with a log version (a TxnTable writes no
+    ``_SUCCESS``), else a ``_SUCCESS`` marker."""
+    if stage.fmt == "delta-lite":
+        return TxnTable(stage.path).latest_version() >= 0
+    return _has_success_marker(spark, stage.path)
+
+
 @dataclass
 class StageResult:
     name: str
     action: str  # "computed" | "skipped" (resume hit) | "transformed"
     attempts: int
+    # rows read back from the written table when run(verify=True), the
+    # reference's post-write count (mysql_bronze_ingestion.py:117-120)
+    rows: int | None = None
 
 
 @dataclass
@@ -71,11 +101,13 @@ class Pipeline:
       the committer's overwrite).
     - **resume**: with ``resume=True``, a stage whose target already
       holds a *committed* write (``_SUCCESS`` marker — written
-      atomically at job commit, so a crash mid-write never leaves one)
-      is not recomputed; its output is read back and the pipeline
-      continues downstream. Rerunning a killed pipeline therefore
-      redoes only the failed stage onward and converges to the same
-      gold output as an uninterrupted run.
+      atomically at job commit, so a crash mid-write never leaves one;
+      for ``delta-lite``, a committed log version) is not recomputed;
+      its output is read back, with an inferred schema since the files
+      may come from an older run, and the pipeline continues
+      downstream. Rerunning a killed pipeline therefore redoes only the
+      failed stage onward and converges to the same gold output as an
+      uninterrupted run.
     """
 
     source: Callable[[SparkSession], DataFrame]
@@ -89,6 +121,16 @@ class Pipeline:
         resume: bool = False,
         report: list[StageResult] | None = None,
     ) -> DataFrame:
+        """Run the stages in order and return the last stage's output.
+
+        A stage this run writes is read back with the schema of the
+        DataFrame it wrote (see ``operators.sinks.read_table``): data
+        columns in written order, then partition columns with their
+        written types. So the read-back costs no schema-inference job,
+        and a materialized stage costs its write and nothing else.
+        ``verify=True`` adds a count of each written stage, reported as
+        ``StageResult.rows``.
+        """
         df = self.source(spark)
         for stage in self.stages:
             if stage.path is None:
@@ -96,9 +138,9 @@ class Pipeline:
                 if report is not None:
                     report.append(StageResult(stage.name, "transformed", 1))
                 continue
-            if resume and _has_success_marker(spark, stage.path):
+            if resume and _committed(spark, stage):
                 # committed output from a prior run — skip recompute
-                df = spark.read.format(stage.fmt).load(stage.path)
+                df = read_table(spark, stage.path, stage.fmt)
                 if report is not None:
                     report.append(StageResult(stage.name, "skipped", 0))
                 continue
@@ -107,7 +149,7 @@ class Pipeline:
                 attempts += 1
                 try:
                     out = stage.transform(df)
-                    write_table(
+                    rows = write_table(
                         out,
                         stage.path,
                         fmt=stage.fmt,
@@ -119,10 +161,16 @@ class Pipeline:
                 except Exception:
                     if attempts > retries:
                         raise
-            df = spark.read.format(stage.fmt).load(stage.path)
+            df = read_table(
+                spark, stage.path, stage.fmt, out.schema, stage.partition_by
+            )
             if stage.register_as:
                 db, tbl = stage.register_as
-                register_external_table(spark, db, tbl, stage.path, stage.fmt)
+                register_external_table(
+                    spark, db, tbl, stage.path, resolve_format(stage.fmt)
+                )
             if report is not None:
-                report.append(StageResult(stage.name, "computed", attempts))
+                report.append(
+                    StageResult(stage.name, "computed", attempts, rows)
+                )
         return df

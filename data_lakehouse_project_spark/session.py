@@ -18,6 +18,10 @@ Scale posture (100 TB design, tested on local[32]):
   pays batch-transfer cost, not per-row pickling.
 - Session timezone pinned to UTC so date/timestamp functions are
   deterministic across driver environments (and match the DuckDB oracle).
+- Parquet is written with ``PARQUET_CODEC`` (zstd), where the reference
+  writes snappy: about a third fewer bytes written and kept per layer
+  and per table version, the trade Apache Iceberg made its default in
+  1.4.0.
 """
 
 from __future__ import annotations
@@ -25,6 +29,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The Parquet codec of every file the engine writes: the session default
+# for Spark's writers and the codec of the engine's pyarrow writers.
+PARQUET_CODEC = "zstd"
 
 # Optional table-format extensions (Delta / Iceberg). Config-only per
 # SURVEY §4: no custom Catalyst code. Applied when the packages are
@@ -119,9 +127,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    Matches the reference's session shape (AQE + coalescing, snappy parquet)
-    while adding scale-safe defaults the reference lacks (skew-join
-    handling, Arrow, UTC session timezone).
+    Matches the reference's session shape (AQE + coalescing) while adding
+    scale-safe defaults the reference lacks (skew-join handling, Arrow,
+    UTC session timezone, ``PARQUET_CODEC`` parquet where the reference
+    writes snappy).
     """
     cpus = default_parallelism()
     builder = (
@@ -138,7 +147,7 @@ def get_spark(
         # source returns them all so Spark still re-applies (advisory)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         # keep scans right-sized so a 100 TB table splits into sane tasks
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # TIMESTAMP(NANOS) parquet (e.g. pandas-written event streams) is

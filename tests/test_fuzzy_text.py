@@ -175,3 +175,36 @@ def test_bm25_plan_take_ordered(spark):
     q = bm25_topk(df, "text", "doc_id", ["spark"], k=5)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+def test_lexical_topk_ties_do_not_depend_on_partitioning(spark):
+    """Docs 1 and 2 hold the same token multiset, so they tie exactly on
+    both rankers, and the id breaks the tie, at every partition count.
+    Summed in arrival order, their scores differed in the last bits by
+    partitioning, and BM25 ranked doc 2 first at some partition counts."""
+    from data_lakehouse_project_spark.ext.text import bm25_topk
+
+    terms = [f"w{i}" for i in range(8)]
+    tied = [t for i, t in enumerate(terms) for _ in range(1 + i % 3)]
+    rows = [(1, " ".join(tied)), (2, " ".join(reversed(tied)))]
+    rows += [
+        (d, " ".join([terms[d * j % 8] for j in range(1, 2 + d % 4)]
+                     + ["pad"] * (d % 10)))
+        for d in range(3, 40)
+    ]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for topk in (bm25_topk, tfidf_topk):
+            seen = set()
+            for n in (1, 3, 4):
+                spark.conf.set("spark.sql.shuffle.partitions", str(n))
+                got = topk(
+                    corpus.repartition(n), "text", "doc_id", terms, k=2
+                ).collect()
+                assert [r.doc_id for r in got] == [1, 2], (topk.__name__, n)
+                assert got[0].score == got[1].score, (topk.__name__, n)
+                seen.add(got[0].score)
+            assert len(seen) == 1, topk.__name__
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)

@@ -150,6 +150,45 @@ def test_quality_rules_flag_failures(spark):
     assert got[3] == "failed:amount_present,amount_positive"
 
 
+def test_bronze_silver_single_projections_keep_columns(spark):
+    """Bronze lineage and silver fixes are one projection each; a silver
+    cast → trim → lower on one column composes into one expression. The
+    columns, their order, types and values are those of the step-by-step
+    chain."""
+    df = spark.createDataFrame(
+        [(1, " AbC ", "7", 2.0), (2, "x", None, -1.0)],
+        "id int, tag string, code string, amount double",
+    )
+    bronze = ingest_bronze(df, "csv", "tags", ingestion_date="2025-08-03")
+    assert bronze.dtypes[4:] == [
+        ("ingestion_timestamp", "timestamp"), ("source_system", "string"),
+        ("source_table", "string"), ("ingestion_date", "date"),
+    ]
+    assert bronze.select("source_system", "source_table", "ingestion_date").first() == (
+        "csv", "tags", datetime.date(2025, 8, 3)
+    )
+    silver = transform_silver(
+        df,
+        SilverSpec(
+            casts={"code": "int", "tag": "string"},
+            trim_columns=["tag"],
+            lower_columns=["tag"],
+            quality_rules={"amount_positive": F.col("amount") > 0},
+        ),
+    )
+    assert silver.dtypes == [
+        ("id", "int"), ("tag", "string"), ("code", "int"), ("amount", "double"),
+        ("transformation_timestamp", "timestamp"), ("data_quality_check", "string"),
+    ]
+    got = sorted(
+        tuple(r)[:4] + (r.data_quality_check,) for r in silver.collect()
+    )
+    assert got == [
+        (1, "abc", 7, 2.0, "passed"),
+        (2, "x", None, -1.0, "failed:amount_positive"),
+    ]
+
+
 def test_pipeline_runner_end_to_end(spark, tmp_path, transactions):
     """plans.Pipeline: declarative bronze→silver→gold with layer writes and
     catalog registration (SURVEY §3 new-engine lifecycle)."""

@@ -510,8 +510,10 @@ def test_optimize_cluster_by_makes_stats_prune(spark, tmp_path):
     scanned, total = t.scan_file_count(prune=pred)
     assert total == 8 and scanned == 8  # stats useless before clustering
 
-    # force a multi-file clustered rewrite (tiny target size)
-    v = t.optimize(spark, target_size_bytes=16 << 10, cluster_by=["v"])
+    # force a multi-file clustered rewrite: a target of a quarter of the
+    # measured table size asks for at least 4 files, whatever the codec
+    quarter = t.describe_detail()["size_bytes"] // 4
+    v = t.optimize(spark, target_size_bytes=quarter, cluster_by=["v"])
     assert t.history()[-1]["operation"] == "optimize"
     scanned2, total2 = t.scan_file_count(prune=pred)
     assert total2 >= 3  # really multiple files
