@@ -66,7 +66,12 @@ def keep_alive(result: DataFrame, *parents) -> DataFrame:
     the plan (measured r13: doc_pagerank_lsh re-ran the minhash
     collapse ~5× inside a single count, 7.5 s → 4.3 s once pinned).
     ``weakref.finalize`` holds strong references to its args until it
-    runs, which is exactly the lifetime extension needed."""
+    runs, which is exactly the lifetime extension needed.
+
+    Assumes CPython: reference counting finalizes ``result`` the moment
+    its last reference drops, so the pin ends deterministically. An
+    interpreter without refcounting (PyPy) would hold ``parents`` until
+    its next GC cycle — later release, never an early one."""
     weakref.finalize(result, _noop_hold, *parents)
     return result
 

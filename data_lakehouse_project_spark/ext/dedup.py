@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_lakehouse_project_spark.cacheutil import release_on_gc
+from data_lakehouse_project_spark.cacheutil import keep_alive, release_on_gc
 from data_lakehouse_project_spark.functions.scalar import normalize_text
 
 # Mersenne prime 2^31-1 for affine rehashing: keeps a*h+b well inside
@@ -1396,7 +1396,6 @@ def trim_duplicated_spans(
     # it must outlive the derived result or the window construction
     # (the heavy per-row stage) recomputes per consumer in the caller's
     # action — pin it to the returned frame (cacheutil.keep_alive)
-    from data_lakehouse_project_spark.cacheutil import keep_alive
     arr = tokens(F.col(text_col))
     indexed = F.zip_with(
         arr,

@@ -281,11 +281,17 @@ def cosine_pairs_lsh(
         [_hyperplanes(dim, num_planes, seed + 1000 * t) for t in range(num_tables)]
     )  # (L*H, dim)
 
+    # the collected vectors, stacked once for the driver route and the
+    # broadcast verify alike
+    mat = (
+        np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        if pdf is not None
+        else None
+    )
     if pdf is not None and driver_pairs_max:
         # driver fast path (see docstring): bucket ids computed here are
         # bit-identical to the all_buckets kernel below (same matmul,
         # same sign rule, same weights)
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         bits = (mat @ planes_all.T) >= 0
         bits = bits.reshape(len(mat), num_tables, num_planes)
         weights = 1 << np.arange(num_planes)
@@ -352,7 +358,6 @@ def cosine_pairs_lsh(
     )
 
     if verify == "broadcast":
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         norms = np.linalg.norm(mat, axis=1)
         pos = pd.Series(np.arange(len(pdf)), index=pdf["id"].to_numpy())
         bc = df.sparkSession.sparkContext.broadcast((mat, norms, pos))

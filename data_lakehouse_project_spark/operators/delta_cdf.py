@@ -283,11 +283,6 @@ def read_delta_changes(
                 # same path removed+re-added: the modern DV-delete
                 # commit shape — diff the per-file DV state
                 a, r = adds_by_path[p], removes_by_path[p]
-                if a.get("dv") or r.get("dv"):
-                    raise UnsupportedDeltaFeature(
-                        f"commit {v} carries a lakehouse.dv internal "
-                        "deletion vector; use the internal reader"
-                    )
                 old_dv = r.get("foreign_dv") or (
                     state.get(p) or {}
                 ).get("foreign_dv")
@@ -313,11 +308,6 @@ def read_delta_changes(
                         (ap, v, ts, pv, "insert", restored)
                     )
             for a in loose_adds:
-                if a.get("dv"):
-                    raise UnsupportedDeltaFeature(
-                        f"commit {v} carries a lakehouse.dv internal "
-                        "deletion vector; use the internal reader"
-                    )
                 excl = sorted(_dv_positions(a.get("foreign_dv"))) or None
                 ins_specs.append(
                     (
@@ -329,11 +319,6 @@ def read_delta_changes(
                     )
                 )
             for r in loose_removes:
-                if r.get("dv"):
-                    raise UnsupportedDeltaFeature(
-                        f"commit {v} carries a lakehouse.dv internal "
-                        "deletion vector; use the internal reader"
-                    )
                 # a removed file with a DV had SOME rows already
                 # deleted — only its LIVE rows leave the table now
                 old_dv = r.get("foreign_dv") or (

@@ -4,18 +4,18 @@ duckdb-delta) can consume — the write-side mirror of
 ``operators/delta_reader.py`` and the Delta counterpart of
 ``operators/iceberg_export.py``.
 
-The internal writer (``operators/txnlog.py``) already emits a
-Delta-protocol-SHAPED log, but three internal conventions would
-mislead a foreign reader, so the export rewrites them:
+The internal writer (``operators/txnlog.py``) already emits a spec
+Delta log (the shared core in ``operators/delta_log.py``), DVs
+included; an export makes a SELF-CONTAINED copy of one snapshot and
+drops the engine's extensions:
 
-* **Deletion vectors**: internal DVs live as parquet ``(path, pos)``
-  tables under ``_dv/`` referenced through a non-protocol
-  ``lakehouse.dv`` tag.  The export either applies them by REWRITING
-  each touched data file without its deleted rows
-  (``dv_mode="rewrite"``, protocol stays reader v1) or converts them
-  to spec roaring-bitmap DV files (``dv_mode="spec"``:
-  ``operators/dv.py`` encoder, ``storageType="u"`` descriptors,
-  reader v3 + the ``deletionVectors`` feature).
+* **Deletion vectors** are already spec roaring-bitmap descriptors.
+  ``dv_mode="spec"`` copies each descriptor verbatim and links its
+  ``deletion_vector_<uuid>.bin`` into the export root (a shallow
+  clone's absolute ``p`` reference becomes a root-relative ``u`` one;
+  reader v3 + the ``deletionVectors`` feature).  ``dv_mode="rewrite"``
+  applies them instead by REWRITING each touched data file without
+  its deleted rows (protocol stays reader v1).
 * **Hidden transform partitions** (``bucket(n,col)`` etc. — physical
   columns not in the logical schema) have no Delta-spec equivalent
   and are REFUSED; identity partition columns export as spec
@@ -46,21 +46,20 @@ import os
 import shutil
 import time
 import uuid as _uuid
-from urllib.parse import quote
 
 from pyspark.sql import SparkSession
 
 from ..session import PARQUET_CODEC
-from .dv import write_dv_file, z85_encode
-from .txnlog import (
-    _file_stats,
-    _parse_partition_spec,
-    _serialize_add,
-    TxnTable,
+from .delta_log import (
+    LOG_DIR,
     _VERSION_DIGITS,
+    _checkpoint_action_types,
+    _serialize_add,
+    _serialize_remove,
+    _write_classic_checkpoint,
 )
-
-LOG_DIR = "_delta_log"
+from .dv import dv_file_path, resolve_dv_positions, z85_encode
+from .txnlog import _file_stats, _parse_partition_spec, TxnTable
 
 
 class DeltaExportError(ValueError):
@@ -70,10 +69,10 @@ class DeltaExportError(ValueError):
 def _partition_by_at(t: TxnTable, version: int) -> list[str]:
     """partition_by declared by the newest commit at or before
     ``version`` (the spec the exported snapshot's layout follows)."""
-    from .txnlog import _list_versions
+    from .delta_log import _commit_versions
 
     for v in reversed(
-        [x for x in _list_versions(t.path) if x <= version]
+        [x for x in _commit_versions(t.path) if x <= version]
     ):
         _, _, _, meta, _ = t._read_commit(v)
         if meta is not None:
@@ -91,31 +90,18 @@ def _link_or_copy(src: str, dst: str) -> None:
         shutil.copy2(src, dst)
 
 
-def _dv_positions_by_file(spark_or_none, table_path: str,
-                          files: list[dict]) -> dict[str, list[int]]:
-    """Internal DV state -> {file basename: sorted deleted positions},
-    read driver-side via pyarrow (DV parquet dirs are metadata-sized:
-    one row per deleted row of the touched files)."""
-    import pyarrow.parquet as pq
-    import pyarrow.dataset as ds
-
-    by_file: dict[str, set[int]] = {}
-    dirs = sorted({f["dv"]["path"] for f in files if f.get("dv")})
-    wanted = {
-        f["path"].rsplit("/", 1)[-1] for f in files if f.get("dv")
-    }
-    for d in dirs:
-        table = ds.dataset(
-            os.path.join(table_path, d), format="parquet"
-        ).to_table(columns=["path", "pos"])
-        for p, pos in zip(
-            table.column("path").to_pylist(),
-            table.column("pos").to_pylist(),
-        ):
-            base = p.rsplit("/", 1)[-1]
-            if base in wanted:
-                by_file.setdefault(base, set()).add(int(pos))
-    return {k: sorted(v) for k, v in by_file.items()}
+def _linked_dv(dv: dict, source_path: str, target_path: str) -> dict:
+    """The export's copy of a DV descriptor: an inline DV is copied
+    verbatim; a DV file is linked into the target root and referenced
+    there by its uuid (``u``), so the export never points back into
+    the source."""
+    src = dv_file_path(dv, source_path)
+    if src is None:
+        return dv
+    name = os.path.basename(src)
+    _link_or_copy(src, os.path.join(target_path, name))
+    u = _uuid.UUID(name[len("deletion_vector_"):-len(".bin")])
+    return {**dv, "storageType": "u", "pathOrInlineDv": z85_encode(u.bytes)}
 
 
 def _rewrite_without_rows(src: str, dst: str,
@@ -182,29 +168,8 @@ def export_delta_snapshot(
     def _src_abs(p: str) -> str:
         return p if os.path.isabs(p) else os.path.join(source_path, p)
 
-    dv_by_file = _dv_positions_by_file(spark, source_path, snap.files)
-    uses_dv = bool(dv_by_file) and dv_mode == "spec"
-
-    # spec DV container: one on-disk file holding every exported DV
-    dv_descriptors: dict[str, dict] = {}
-    if uses_dv:
-        dv_uuid = _uuid.uuid4()
-        dv_name = f"deletion_vector_{dv_uuid}.bin"
-        ordered = sorted(dv_by_file)
-        frags = write_dv_file(
-            os.path.join(target_path, dv_name),
-            [dv_by_file[b] for b in ordered],
-        )
-        enc = z85_encode(dv_uuid.bytes)
-        for base, frag in zip(ordered, frags):
-            dv_descriptors[base] = {
-                "storageType": "u",
-                "pathOrInlineDv": enc,
-                "offset": frag["offset"],
-                "sizeInBytes": frag["sizeInBytes"],
-                "cardinality": frag["cardinality"],
-            }
-
+    n_dv = sum(1 for f in snap.files if f.get("foreign_dv"))
+    uses_dv = bool(n_dv) and dv_mode == "spec"
     adds: list[dict] = []
     n_rewritten = 0
     for f in sorted(snap.files, key=lambda x: x["path"]):
@@ -217,22 +182,20 @@ def export_delta_snapshot(
             else f["path"].rsplit("/", 1)[-1]
         )
         dst = os.path.join(target_path, rel)
-        base = f["path"].rsplit("/", 1)[-1]
-        positions = dv_by_file.get(base) if f.get("dv") else None
-        clean = {k: v for k, v in f.items() if k not in ("dv", "bloom")}
-        clean["path"] = rel
-        if positions and dv_mode == "rewrite":
-            _rewrite_without_rows(src, dst, positions)
+        dv = f.get("foreign_dv")
+        clean = {**f, "path": rel, "bloom": None, "foreign_dv": None}
+        if dv and dv_mode == "rewrite":
+            _rewrite_without_rows(
+                src, dst, resolve_dv_positions(dv, source_path)
+            )
             n_rewritten += 1
             clean["size_bytes"] = os.path.getsize(dst)
             clean["stats"] = _file_stats(dst)
         else:
             _link_or_copy(src, dst)
-        raw = _serialize_add(clean, ts)
-        raw.pop("tags", None)  # no internal tags in a spec export
-        if positions and dv_mode == "spec":
-            raw["deletionVector"] = dv_descriptors[base]
-        adds.append(raw)
+            if dv:
+                clean["foreign_dv"] = _linked_dv(dv, source_path, target_path)
+        adds.append(_serialize_add(clean, ts))
 
     protocol = (
         {
@@ -304,7 +267,7 @@ def export_delta_snapshot(
         "files": len(adds),
         "num_rows": snap.num_rows,
         "dv_mode": dv_mode,
-        "files_with_dv": len(dv_by_file),
+        "files_with_dv": n_dv,
         "files_rewritten": n_rewritten,
         "checkpoint": bool(write_checkpoint),
     }
@@ -314,16 +277,14 @@ def sync_delta_export(
     spark: SparkSession,
     source_path: str,
     target_path: str,
-    dv_inline_max: int = 8192,
     checkpoint_every: int = 0,
 ) -> dict:
     """Incrementally mirror an internal table into a spec-Delta
     export: the first call full-exports the current snapshot
     (``export_delta_snapshot``); every later call translates each NEW
     internal commit into one foreign commit — adds (new data files
-    hard-linked; internal DVs re-encoded as spec descriptors, inline
-    when ≤ ``dv_inline_max`` serialized bytes, else a per-commit DV
-    file), removes, metaData changes, cdc actions (``_change_data``
+    hard-linked; DV descriptors copied verbatim, their DV files
+    linked), removes, metaData changes, cdc actions (``_change_data``
     files linked, so foreign CDF readers see the same change feed),
     and a protocol upgrade the first time DVs appear.  The mirror is
     therefore a PER-COMMIT replica: foreign snapshot reads, time
@@ -399,7 +360,7 @@ def sync_delta_export(
         adds, removes, cinfo, meta, _txn = t._read_commit(s)
         ts = int((cinfo or {}).get("timestamp") or 0)
         actions: list[dict] = []
-        commit_uses_dv = any(a.get("dv") for a in adds)
+        commit_uses_dv = any(a.get("foreign_dv") for a in adds)
         if commit_uses_dv and not dv_active:
             actions.append(
                 {
@@ -450,11 +411,6 @@ def sync_delta_export(
                     }
                 }
             )
-        from .dv import rbm_array_serialize, write_dv_file, z85_encode
-
-        dv_by_file = _dv_positions_by_file(spark, source_path, adds)
-        add_raws: list[dict] = []
-        big: list[tuple[int, str, list[int]]] = []  # (add idx, base, pos)
         for a in adds:
             if os.path.isabs(a["path"]):
                 raise DeltaExportError(
@@ -463,60 +419,20 @@ def sync_delta_export(
                 )
             src_f = os.path.join(source_path, a["path"])
             _link_or_copy(src_f, os.path.join(target_path, a["path"]))
+            dv = a.get("foreign_dv")
             clean = {
-                k: v for k, v in a.items() if k not in ("dv", "bloom")
+                **a,
+                "bloom": None,
+                "foreign_dv": dv and _linked_dv(dv, source_path, target_path),
             }
-            raw = _serialize_add(clean, ts)
-            raw.pop("tags", None)
-            if a.get("dv"):
-                base = a["path"].rsplit("/", 1)[-1]
-                positions = dv_by_file.get(base, [])
-                blob = rbm_array_serialize(positions)
-                if len(blob) <= dv_inline_max:
-                    pad = (-len(blob)) % 4
-                    raw["deletionVector"] = {
-                        "storageType": "i",
-                        "pathOrInlineDv": z85_encode(
-                            blob + b"\x00" * pad
-                        ),
-                        "sizeInBytes": len(blob),
-                        "cardinality": len(positions),
-                    }
-                else:
-                    big.append((len(add_raws), base, positions))
-            add_raws.append(raw)
-        if big:
-            # ONE per-commit DV file holding every oversized bitmap;
-            # write once so every descriptor's offset is final
-            u = _uuid.uuid4()
-            frags = write_dv_file(
-                os.path.join(
-                    target_path, f"deletion_vector_{u}.bin"
-                ),
-                [pos for _, _, pos in big],
-            )
-            enc = z85_encode(u.bytes)
-            for (idx, _base, _pos), frag in zip(big, frags):
-                add_raws[idx]["deletionVector"] = {
-                    "storageType": "u",
-                    "pathOrInlineDv": enc,
-                    "offset": frag["offset"],
-                    "sizeInBytes": frag["sizeInBytes"],
-                    "cardinality": frag["cardinality"],
-                }
-        actions.extend({"add": raw} for raw in add_raws)
+            actions.append({"add": _serialize_add(clean, ts)})
         for r in removes:
             if os.path.isabs(r["path"]):
                 raise DeltaExportError(
                     f"absolute data path {r['path']} cannot be "
                     "mirrored incrementally"
                 )
-            out = {
-                "path": quote(r["path"]),
-                "deletionTimestamp": ts,
-                "dataChange": bool(r.get("data_change", True)),
-            }
-            actions.append({"remove": out})
+            actions.append({"remove": _serialize_remove(r, ts)})
         # cdc actions: link the _change_data files so foreign CDF
         # readers replay the same change feed
         with open(
@@ -982,99 +898,6 @@ def convert_parquet_dir_to_delta(
     os.replace(commit + ".tmp", commit)
     return {"version": 0, "files": len(adds),
             "partition_columns": part_cols}
-
-
-def _checkpoint_action_types():
-    """Arrow types for the spec's columnar checkpoint action layout:
-    string->string maps for map fields (an empty dict would otherwise
-    infer an EMPTY STRUCT, which parquet cannot serialize), nullable
-    structs per action.  Shared by the classic and v2 writers."""
-    import pyarrow as pa
-
-    smap = pa.map_(pa.string(), pa.string())
-    slist = pa.list_(pa.string())
-    protocol_t = pa.struct(
-        [
-            ("minReaderVersion", pa.int32()),
-            ("minWriterVersion", pa.int32()),
-            ("readerFeatures", slist),
-            ("writerFeatures", slist),
-        ]
-    )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct([("provider", pa.string()),
-                                  ("options", smap)])),
-            ("schemaString", pa.string()),
-            ("partitionColumns", slist),
-            ("configuration", smap),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    dv_t = pa.struct(
-        [
-            ("storageType", pa.string()),
-            ("pathOrInlineDv", pa.string()),
-            ("offset", pa.int32()),
-            ("sizeInBytes", pa.int32()),
-            ("cardinality", pa.int64()),
-        ]
-    )
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", smap),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("stats", pa.string()),
-            ("deletionVector", dv_t),
-            # row tracking rides through checkpoints (spec: add fields)
-            ("baseRowId", pa.int64()),
-            ("defaultRowCommitVersion", pa.int64()),
-        ]
-    )
-    return protocol_t, meta_t, add_t
-
-
-def _write_classic_checkpoint(
-    target_path: str,
-    protocol: dict,
-    meta: dict,
-    adds: list[dict],
-    version: int = 0,
-) -> None:
-    """Classic single-part checkpoint (``V.checkpoint.parquet``) +
-    ``_last_checkpoint`` pointer, one action per row in the spec's
-    columnar action layout (absent actions null per row)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    protocol_t, meta_t, add_t = _checkpoint_action_types()
-    rows: list[dict] = [
-        {"protocol": protocol, "metaData": None, "add": None},
-        {"protocol": None, "metaData": meta, "add": None},
-    ]
-    rows.extend(
-        {"protocol": None, "metaData": None, "add": a} for a in adds
-    )
-    table = pa.Table.from_pylist(
-        rows,
-        schema=pa.schema(
-            [("protocol", protocol_t), ("metaData", meta_t),
-             ("add", add_t)]
-        ),
-    )
-    name = f"{version:0{_VERSION_DIGITS}d}.checkpoint.parquet"
-    pq.write_table(
-        table, os.path.join(target_path, LOG_DIR, name),
-        compression=PARQUET_CODEC,
-    )
-    with open(
-        os.path.join(target_path, LOG_DIR, "_last_checkpoint"), "w"
-    ) as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
 
 
 def _write_v2_checkpoint(

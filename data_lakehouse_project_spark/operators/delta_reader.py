@@ -1,13 +1,14 @@
-"""Reader for EXTERNAL Delta-protocol transaction logs.
+"""DataFrame reader for Delta-protocol transaction logs.
 
-``operators/txnlog.py`` writes a Delta-protocol-shaped ``_delta_log``
-(JSON commits + parquet checkpoints); this module closes the opposite
-direction: consume a ``_delta_log`` written by ANY protocol-compliant
-writer (delta-spark, delta-rs, ...) and expose the table as a
-DataFrame.  It follows the published delta-io PROTOCOL.md reader
-rules — no reference-repo code is involved (the reference,
-Noureddineblbli/data-lakehouse-project, has no table format at all;
-this is part of the SURVEY §2.8 "modern lakehouse" north star).
+Any ``_delta_log`` reads here — one written by a protocol-compliant
+writer (delta-spark, delta-rs, ...) or by the engine's own
+``operators/txnlog.py``, deletion vectors included: both replay
+through the one log core, ``operators/delta_log.py``, and this module
+turns the replayed snapshot into a DataFrame.  It follows the
+published delta-io PROTOCOL.md reader rules — no reference-repo code
+is involved (the reference, Noureddineblbli/data-lakehouse-project,
+has no table format at all; this is part of the SURVEY §2.8 "modern
+lakehouse" north star).
 
 Reader semantics implemented
 ----------------------------
@@ -55,557 +56,27 @@ Spark never lists pruned files.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .txnlog import (
-    LOG_DIR,
-    _VERSION_DIGITS,
-    _file_may_match,
-    _parse_add,
-    _parse_meta,
-    _parse_remove,
-    _schema_from_json,
+# the log core: replay, protocol gating and the DV anti-join live in
+# delta_log; the names other modules import from here are re-exported
+from .delta_log import (  # noqa: F401
+    CorruptDeltaLog,
+    UnsupportedDeltaFeature,
+    _check_protocol,
+    _commit_timestamp_ms,
+    _commit_versions,
+    _read_commit_actions,
+    _read_v2_checkpoint_state,
+    _spark_path_key,
+    drop_deleted_rows,
+    read_delta_snapshot,
+    sniff_commit_meta_protocol,
 )
-
-# Reader-version-3 table features this reader implements correctly.
-# timestampNtz: Spark reads TIMESTAMP_NTZ parquet natively.
-# vacuumProtocolCheck: imposes no read-path behavior by design.
-# deletionVectors: honored — roaring-bitmap DVs are decoded
-#   (operators/dv.py) and applied as a _metadata.row_index anti-join.
-# v2Checkpoint: UUID-named checkpoint manifests (parquet or json)
-#   with sidecar files are replayed by _read_v2_checkpoint_state.
-# variantType: Spark 4 reads the variant parquet encoding natively
-#   through the explicit-schema scan (probed + pinned in
-#   test_variant_column_reads); SHREDDED variants advertise a
-#   separate feature (variantShredding) and stay refused.
-# typeWidening: the explicit-schema scan upcasts EVERY widening the
-#   spec allows (int->long/double, float->double, decimal precision
-#   AND scale widening, date->timestamp_ntz — full matrix probed and
-#   pinned in test_type_widening_reads), so files written with the
-#   pre-widening type read back as the current schema's type.
-# Everything else (variantShredding, catalogManaged, ...) must be
-# REFUSED, not ignored.
-SUPPORTED_READER_FEATURES = {
-    # columnMapping: "name" and "id" modes are implemented (physical
-    # names / parquet field-id resolution); the mode-specific gate in
-    # _check_protocol still refuses any OTHER mode, so advertising the
-    # feature here is consistent with the minReaderVersion=2 path.
-    "columnMapping",
-    "timestampNtz",
-    "vacuumProtocolCheck",
-    "deletionVectors",
-    "v2Checkpoint",
-    "variantType",
-    "typeWidening",
-    "typeWidening-preview",
-}
-
-
-class UnsupportedDeltaFeature(ValueError):
-    """The table requires a reader capability this engine lacks; per
-    the Delta protocol the reader must refuse rather than mis-read."""
-
-
-class CorruptDeltaLog(ValueError):
-    """The log violates protocol invariants (gap in versions, no
-    commits, missing protocol/metaData)."""
-
-
-@dataclass
-class DeltaSnapshot:
-    version: int
-    files: list[dict]  # internal add dicts (path/stats/partition_values)
-    schema_json: str | None
-    partition_columns: list[str]
-    configuration: dict
-    protocol: dict
-    timestamp_ms: int
-    txns: dict = field(default_factory=dict)
-
-    @property
-    def num_rows(self) -> int:
-        """LOGICAL row count: physical stats minus each file's
-        deletion-vector cardinality (stats.numRecords counts rows the
-        DV has already deleted)."""
-        return sum(
-            f.get("stats", {}).get("num_rows", 0)
-            - int((f.get("foreign_dv") or {}).get("cardinality", 0))
-            for f in self.files
-        )
-
-
-# ---------------------------------------------------------------- log layout
-
-
-def _log_dir(table_path: str) -> str:
-    return os.path.join(table_path, LOG_DIR)
-
-
-def _commit_versions(table_path: str) -> list[int]:
-    """Versions with a JSON commit file, ascending."""
-    out = []
-    for p in glob.glob(os.path.join(_log_dir(table_path), "*.json")):
-        stem = os.path.basename(p)[: -len(".json")]
-        if len(stem) == _VERSION_DIGITS and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
-
-
-def _checkpoint_parts(table_path: str) -> dict[int, list[str]]:
-    """version -> sorted CLASSIC part files, for single- and
-    multi-part classic checkpoints (``V.checkpoint.parquet`` and
-    ``V.checkpoint.NNNNNNNNNN.MMMMMMMMMM.parquet``).  V2 UUID-named
-    checkpoints (``V.checkpoint.<uuid>.parquet|json``) are a different
-    format — mixing one into a classic part list would silently drop
-    its sidecar state — and are listed by ``_v2_checkpoints``."""
-    found: dict[int, list[str]] = {}
-    for p in glob.glob(
-        os.path.join(_log_dir(table_path), "*.checkpoint*.parquet")
-    ):
-        name = os.path.basename(p)
-        bits = name.split(".")
-        if not (bits[0].isdigit() and len(bits[0]) == _VERSION_DIGITS):
-            continue
-        if bits[1] != "checkpoint" or bits[-1] != "parquet":
-            continue
-        if len(bits) == 4 and not bits[2].isdigit():
-            continue  # v2 UUID name
-        if len(bits) == 5 and not (
-            bits[2].isdigit() and bits[3].isdigit()
-        ):
-            continue
-        found.setdefault(int(bits[0]), []).append(p)
-    return {v: sorted(ps) for v, ps in found.items()}
-
-
-def _v2_checkpoints(table_path: str) -> dict[int, list[str]]:
-    """version -> v2 UUID-named checkpoint manifests (parquet or
-    json), each one COMPLETE on its own (spec: writers may leave
-    several at one version; any is usable)."""
-    found: dict[int, list[str]] = {}
-    for ext in ("parquet", "json"):
-        for p in glob.glob(
-            os.path.join(_log_dir(table_path), f"*.checkpoint.*.{ext}")
-        ):
-            bits = os.path.basename(p).split(".")
-            if (
-                len(bits) == 4
-                and bits[0].isdigit()
-                and len(bits[0]) == _VERSION_DIGITS
-                and bits[1] == "checkpoint"
-                and not bits[2].isdigit()
-            ):
-                found.setdefault(int(bits[0]), []).append(p)
-    return {v: sorted(ps) for v, ps in found.items()}
-
-
-def _last_checkpoint_version(table_path: str) -> int | None:
-    """The ``_last_checkpoint`` pointer, if present and readable. Only
-    an accelerator — a corrupt pointer falls back to listing."""
-    p = os.path.join(_log_dir(table_path), "_last_checkpoint")
-    try:
-        with open(p) as fh:
-            return int(json.load(fh)["version"])
-    except (OSError, ValueError, KeyError, TypeError):
-        return None
-
-
-# ------------------------------------------------------------- action intake
-
-
-def _check_protocol(protocol: dict, configuration: dict) -> None:
-    reader = int(protocol.get("minReaderVersion", 1))
-    if reader > 3:
-        raise UnsupportedDeltaFeature(
-            f"minReaderVersion {reader} exceeds the supported protocol"
-        )
-    mapping = (configuration or {}).get("delta.columnMapping.mode", "none")
-    if mapping not in ("none", "", "name", "id"):
-        # "name": physical names from schemaString metadata; "id":
-        # parquet field-id resolution (Spark's fieldId.read path).
-        raise UnsupportedDeltaFeature(
-            f"column mapping mode '{mapping}' is not supported"
-        )
-    if reader >= 3:
-        missing = [
-            f
-            for f in protocol.get("readerFeatures") or []
-            if f not in SUPPORTED_READER_FEATURES
-        ]
-        if missing:
-            raise UnsupportedDeltaFeature(
-                f"table requires reader features {missing}; supported: "
-                f"{sorted(SUPPORTED_READER_FEATURES)}"
-            )
-
-
-def _intake_add(raw: dict) -> dict:
-    """Foreign ``add`` -> internal dict.  Spec ``deletionVector``
-    descriptors are kept (decoded at scan time by ``operators/dv.py``);
-    the INTERNAL writer's non-protocol DV layout (``lakehouse.dv``
-    tag) is refused here — it is not roaring-format data, and ignoring
-    it would resurrect deleted rows (such tables route through the
-    internal replayer via ``sources.readers.read_delta``)."""
-    parsed = _parse_add(raw)
-    if parsed.get("dv"):
-        raise UnsupportedDeltaFeature(
-            "add action carries a lakehouse.dv internal deletion "
-            "vector; read this table through the internal replayer "
-            "(read_delta routes it automatically)"
-        )
-    if raw.get("deletionVector"):
-        dv = {
-            k: v for k, v in raw["deletionVector"].items() if v is not None
-        }
-        if not dv.get("storageType") or "pathOrInlineDv" not in dv:
-            raise UnsupportedDeltaFeature(
-                f"malformed deletionVector descriptor {dv!r}"
-            )
-        parsed["foreign_dv"] = dv
-    # row tracking (writer feature): fresh row ids / commit versions
-    # derive from these per-add fields; surfaced by
-    # read_delta_table(row_ids=True)
-    for src, dst in (
-        ("baseRowId", "base_row_id"),
-        ("defaultRowCommitVersion", "default_row_commit_version"),
-    ):
-        if raw.get(src) is not None:
-            parsed[dst] = int(raw[src])
-    return parsed
-
-
-class _CheckpointState:
-    __slots__ = ("adds", "meta_raw", "protocol_raw", "txns")
-
-    def __init__(self):
-        self.adds: dict[str, dict] = {}
-        self.meta_raw = None
-        self.protocol_raw = None
-        self.txns: dict[str, int] = {}
-
-    def intake(self, row: dict) -> None:
-        """One checkpoint row/action into the state. ``remove`` rows in
-        any checkpoint are expired-tombstone bookkeeping only and never
-        contribute to the snapshot."""
-        if row.get("add"):
-            a = {k: v for k, v in row["add"].items() if v is not None}
-            for m in ("partitionValues", "tags"):
-                if isinstance(a.get(m), list):  # pa map -> dict
-                    a[m] = dict(a[m])
-            parsed = _intake_add(a)
-            self.adds[parsed["path"]] = parsed
-        elif row.get("metaData"):
-            m = {
-                k: v for k, v in row["metaData"].items() if v is not None
-            }
-            for mm in ("configuration",):
-                if isinstance(m.get(mm), list):
-                    m[mm] = dict(m[mm])
-            if isinstance(m.get("format"), dict) and isinstance(
-                m["format"].get("options"), list
-            ):
-                m["format"]["options"] = dict(m["format"]["options"])
-            self.meta_raw = m
-        elif row.get("protocol"):
-            self.protocol_raw = {
-                k: v for k, v in row["protocol"].items() if v is not None
-            }
-        elif row.get("txn"):
-            t = row["txn"]
-            self.txns[t["appId"]] = max(
-                self.txns.get(t["appId"], -1), t["version"]
-            )
-
-    def result(self):
-        return self.adds, self.meta_raw, self.protocol_raw, self.txns
-
-
-def _read_checkpoint_state(part_files: list[str]):
-    """Replay state from a classic parquet checkpoint (all parts):
-    returns (adds_by_path, meta_raw, protocol_raw, txns)."""
-    import pyarrow.parquet as pq
-
-    st = _CheckpointState()
-    for part in part_files:
-        for row in pq.read_table(part).to_pylist():
-            st.intake(row)
-    return st.result()
-
-
-def _read_v2_checkpoint_state(manifest_path: str, table_path: str):
-    """Replay state from a V2 UUID-named checkpoint (spec: V2 Spec
-    Checkpoints): the manifest (parquet or json) carries
-    ``checkpointMetadata``, protocol/metaData/txn, optionally inline
-    add/remove, and ``sidecar`` actions pointing at parquet files under
-    ``_delta_log/_sidecars/`` that hold the file actions.  A missing
-    sidecar is a hard error — silently skipping one would drop live
-    files from the snapshot."""
-    import pyarrow.parquet as pq
-
-    st = _CheckpointState()
-    sidecars: list[str] = []
-    expect_version = int(os.path.basename(manifest_path).split(".")[0])
-
-    def _row(row: dict) -> None:
-        cm = row.get("checkpointMetadata")
-        if cm:
-            v = cm.get("version")
-            if v is not None and int(v) != expect_version:
-                raise CorruptDeltaLog(
-                    f"v2 checkpoint {manifest_path} declares version "
-                    f"{v}, file name says {expect_version}"
-                )
-            return
-        sc = row.get("sidecar")
-        if sc:
-            p = sc["path"]
-            if not os.path.isabs(p):
-                p = os.path.join(_log_dir(table_path), "_sidecars", p)
-            sidecars.append(p)
-            return
-        st.intake(row)
-
-    if manifest_path.endswith(".json"):
-        with open(manifest_path) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    _row(json.loads(line))
-    else:
-        for row in pq.read_table(manifest_path).to_pylist():
-            _row(row)
-    for sc in sidecars:
-        if not os.path.exists(sc):
-            raise CorruptDeltaLog(
-                f"v2 checkpoint sidecar missing: {sc}"
-            )
-        for row in pq.read_table(sc).to_pylist():
-            st.intake(row)
-    return st.result()
-
-
-def _read_commit_actions(table_path: str, version: int):
-    """One foreign JSON commit -> (adds, removes, commit_info_raw,
-    meta_raw, protocol_raw, txns, cdc)."""
-    adds, removes, txns, cdc = [], [], [], []
-    info = meta_raw = protocol_raw = None
-    fname = os.path.join(
-        _log_dir(table_path), f"{version:0{_VERSION_DIGITS}d}.json"
-    )
-    with open(fname) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "add" in action:
-                adds.append(_intake_add(action["add"]))
-            elif "remove" in action:
-                removes.append(_parse_remove(action["remove"]))
-            elif "commitInfo" in action:
-                info = action["commitInfo"]
-            elif "metaData" in action:
-                meta_raw = action["metaData"]
-            elif "protocol" in action:
-                protocol_raw = action["protocol"]
-            elif "txn" in action:
-                txns.append(action["txn"])
-            elif "cdc" in action:
-                cdc.append(action["cdc"])
-    return adds, removes, info, meta_raw, protocol_raw, txns, cdc
-
-
-def sniff_commit_metadata(table_path: str, version: int) -> dict | None:
-    """Parse ONLY the ``metaData`` action of one commit file.
-
-    Routing (``sources.readers.read_delta``) needs the newest
-    ``metaData.configuration`` to decide internal-vs-foreign BEFORE any
-    feature gating runs; ``_read_commit_actions`` would validate every
-    ``add`` on the way (and refuse e.g. internal ``lakehouse.dv`` tags),
-    so this sniff never touches non-metaData lines."""
-    fname = os.path.join(
-        _log_dir(table_path), f"{version:0{_VERSION_DIGITS}d}.json"
-    )
-    with open(fname) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "metaData" in action:
-                return action["metaData"]
-    return None
-
-
-def sniff_commit_meta_protocol(
-    table_path: str, version: int
-) -> tuple[dict | None, dict | None]:
-    """Parse ONLY the ``metaData`` and ``protocol`` actions of one
-    commit file — the pair routing/gating needs, without running
-    ``_intake_add`` validation over every add line (which would refuse
-    e.g. internal ``lakehouse.dv`` tags before the caller even knows
-    which reader to route to)."""
-    fname = os.path.join(
-        _log_dir(table_path), f"{version:0{_VERSION_DIGITS}d}.json"
-    )
-    meta_raw = protocol_raw = None
-    with open(fname) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "metaData" in action:
-                meta_raw = action["metaData"]
-            elif "protocol" in action:
-                protocol_raw = action["protocol"]
-            if meta_raw is not None and protocol_raw is not None:
-                break
-    return meta_raw, protocol_raw
-
-
-def _commit_timestamp_ms(table_path: str, version: int) -> int:
-    """``commitInfo.inCommitTimestamp`` when present (the ICT table
-    feature's authoritative, monotonic clock — the spec says readers
-    MUST prefer it for time travel), else ``commitInfo.timestamp``,
-    else commit-file mtime (the spec's fallback ordering clock)."""
-    _, _, info, _, _, _, _ = _read_commit_actions(table_path, version)
-    if info and isinstance(info.get("inCommitTimestamp"), (int, float)):
-        return int(info["inCommitTimestamp"])
-    if info and isinstance(info.get("timestamp"), (int, float)):
-        return int(info["timestamp"])
-    fname = os.path.join(
-        _log_dir(table_path), f"{version:0{_VERSION_DIGITS}d}.json"
-    )
-    return int(os.path.getmtime(fname) * 1000)
-
-
-# ----------------------------------------------------------------- snapshot
-
-
-def read_delta_snapshot(
-    table_path: str,
-    version: int | None = None,
-    timestamp_ms: int | None = None,
-) -> DeltaSnapshot:
-    """Reconstruct the table state at ``version`` / ``timestamp_ms``
-    (default: latest) from a foreign ``_delta_log``."""
-    versions = _commit_versions(table_path)
-    classic_cp = _checkpoint_parts(table_path)
-    v2_cp = _v2_checkpoints(table_path)
-    checkpoints = set(classic_cp) | set(v2_cp)
-    if not versions and not checkpoints:
-        raise CorruptDeltaLog(f"no _delta_log commits at {table_path}")
-
-    latest = max(versions[-1] if versions else -1, max(checkpoints, default=-1))
-    if timestamp_ms is not None:
-        best = None
-        for v in versions:
-            if _commit_timestamp_ms(table_path, v) <= timestamp_ms:
-                best = v
-            else:
-                break
-        if best is None:
-            raise ValueError(
-                f"no commit at or before timestamp_ms={timestamp_ms}"
-            )
-        version = best
-    elif version is None:
-        version = latest
-    elif version > latest or (
-        version not in versions and version not in checkpoints
-    ):
-        raise ValueError(f"version {version} not present in the log")
-
-    # -- bootstrap from the newest usable checkpoint <= version
-    active: dict[str, dict] = {}
-    meta_raw = protocol_raw = None
-    txns: dict[str, int] = {}
-    start = versions[0] if versions else 0
-    ts = 0
-    hinted = _last_checkpoint_version(table_path)
-    candidates = sorted(
-        (c for c in checkpoints if c <= version), reverse=True
-    )
-    if hinted is not None and hinted in checkpoints and hinted <= version:
-        candidates.remove(hinted)
-        candidates.insert(0, hinted)
-    done = False
-    for c in candidates:
-        # classic parts first, then each self-complete v2 manifest
-        attempts = []
-        if c in classic_cp:
-            attempts.append(("classic", classic_cp[c]))
-        for m in v2_cp.get(c, []):
-            attempts.append(("v2", m))
-        for kind, ref in attempts:
-            try:
-                if kind == "classic":
-                    active, meta_raw, protocol_raw, txns = (
-                        _read_checkpoint_state(ref)
-                    )
-                else:
-                    active, meta_raw, protocol_raw, txns = (
-                        _read_v2_checkpoint_state(ref, table_path)
-                    )
-            except UnsupportedDeltaFeature:
-                raise
-            except Exception:  # torn file, schema drift: next candidate
-                continue
-            start = c + 1
-            done = True
-            break
-        if done:
-            break
-
-    # -- contiguous JSON replay after the bootstrap point
-    replay = [v for v in versions if start <= v <= version]
-    expected = list(range(start, version + 1))
-    if replay != expected:
-        raise CorruptDeltaLog(
-            f"commit gap: need versions {start}..{version}, have {replay}"
-        )
-    for v in replay:
-        adds, removes, info, m_raw, p_raw, vtxns, _ = _read_commit_actions(
-            table_path, v
-        )
-        for r in removes:
-            active.pop(r["path"], None)
-        for a in adds:
-            active[a["path"]] = a
-        if m_raw is not None:
-            meta_raw = m_raw
-        if p_raw is not None:
-            protocol_raw = p_raw
-        for t in vtxns:
-            txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-        if info and isinstance(info.get("inCommitTimestamp"), (int, float)):
-            ts = int(info["inCommitTimestamp"])
-        elif info and isinstance(info.get("timestamp"), (int, float)):
-            ts = int(info["timestamp"])
-
-    if meta_raw is None or protocol_raw is None:
-        raise CorruptDeltaLog(
-            "log replay produced no metaData/protocol action"
-        )
-    _check_protocol(protocol_raw, meta_raw.get("configuration") or {})
-    meta = _parse_meta(meta_raw)
-    return DeltaSnapshot(
-        version=version,
-        files=list(active.values()),
-        schema_json=meta["schema_json"],
-        partition_columns=list(meta_raw.get("partitionColumns") or []),
-        configuration=dict(meta_raw.get("configuration") or {}),
-        protocol=protocol_raw,
-        timestamp_ms=ts,
-        txns=txns,
-    )
-
+from .txnlog import _file_may_match, _schema_from_json
 
 # --------------------------------------------------------------- DataFrame
 
@@ -732,25 +203,6 @@ def _map_schema_json(schema_json: str, mode: str) -> dict:
         "type": "struct",
         "fields": [_field(f) for f in top.get("fields", [])],
     }
-
-
-def _spark_path_key():
-    """``_metadata.file_path`` -> plain absolute filesystem path.
-
-    Spark renders file_path as a Hadoop URI (``file:/...``) with space
-    and ``%`` percent-encoded but literal ``+`` and non-ASCII kept raw
-    (probed empirically) — so comparing against driver-side strings
-    needs a DECODE on this side, not an encode on the driver side
-    (``Path.as_uri()`` quotes ``+``/non-ASCII and would mismatch).
-    ``url_decode`` is form-decoding (``+`` -> space), so literal ``+``
-    is pre-protected as ``%2B``; the scheme is stripped only as a
-    leading anchor, never mid-string."""
-    from pyspark.sql import functions as F
-
-    fp = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:(//)?", ""
-    )
-    return F.url_decode(F.replace(fp, F.lit("+"), F.lit("%2B")))
 
 
 def _delta_arrow_scan(
@@ -1042,53 +494,11 @@ def read_delta_table(
             *meta_cols.keys(),
         )
 
-    # -- deletion vectors: decode each add's bitmap driver-side (the
-    # same O(total cardinality) state the reference reader broadcasts)
-    # and drop deleted rows by (file_id, row_index) anti-join.  File
-    # paths are dictionary-encoded to small int ids so the positions
-    # side carries two ints per deleted row (arrow-built, never Python
-    # tuples — 10^8 deletions stay ~1.2 GB, not an OOM of duplicated
-    # path strings); broadcast is gated on estimated BYTES, and at
-    # large cardinality it degrades to a shuffled anti-join.
+    # -- deletion vectors: (file, row_index) anti-join (delta_log)
     if dv_adds:
-        import numpy as np
-        import pandas as pd
-
-        from .dv import resolve_dv_positions
-
-        scanned = {os.path.abspath(p) for p in paths}
-        fid_rows: list[tuple[str, int]] = []
-        id_chunks, pos_chunks = [], []
-        for i, f in enumerate(dv_adds):
-            fkey = os.path.abspath(_abs(f["path"]))
-            if fkey not in scanned:  # refuse-don't-misread guard
-                raise CorruptDeltaLog(
-                    f"deletion vector targets unscanned file {fkey}"
-                )
-            positions = resolve_dv_positions(f["foreign_dv"], table_path)
-            if not positions:
-                continue
-            fid_rows.append((fkey, i))
-            id_chunks.append(np.full(len(positions), i, dtype=np.int32))
-            pos_chunks.append(np.asarray(positions, dtype=np.int64))
-        if fid_rows:
-            ids = np.concatenate(id_chunks)
-            poss = np.concatenate(pos_chunks)
-            deleted = spark.createDataFrame(
-                pd.DataFrame({"__dv_fid": ids, "__dv_pos": poss})
-            )
-            if ids.nbytes + poss.nbytes <= 64 << 20:  # ~5.3M rows
-                deleted = F.broadcast(deleted)
-            fdim = F.broadcast(
-                spark.createDataFrame(fid_rows, ["__delta_path", "__dv_fid"])
-            )
-            # rows of non-DV files get a null fid and survive the
-            # anti-join (null keys never match)
-            df = (
-                df.join(fdim, "__delta_path", "left")
-                .join(deleted, ["__dv_fid", "__dv_pos"], "left_anti")
-                .drop("__dv_fid")
-            )
+        df = drop_deleted_rows(
+            spark, df, dv_adds, table_path, _abs, "__delta_path", "__dv_pos"
+        )
 
     if part_cols:
         # partition values live ONLY in the log (spec: data files do

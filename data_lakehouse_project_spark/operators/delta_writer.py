@@ -49,7 +49,13 @@ from .delta_reader import (
     read_delta_snapshot,
 )
 from .concurrency import ConcurrentCommitError
-from .txnlog import LOG_DIR, _VERSION_DIGITS, _file_stats, _serialize_add
+from .delta_log import (
+    LOG_DIR,
+    _VERSION_DIGITS,
+    _dv_pair_actions,
+    _serialize_add,
+)
+from .txnlog import _file_stats
 
 # Writer-version-7 table features appends are implemented for.
 # appendOnly: appends are exactly what it allows.
@@ -949,81 +955,6 @@ def _keyed_scan(
                 c, F.col(f"__pv_{c}").cast(schema[c].dataType)
             ).drop(f"__pv_{c}")
     return df
-
-
-def _dv_pair_actions(
-    table_path: str,
-    snap,
-    by_path: dict[str, list[int]],
-    _abs,
-    ts: int,
-) -> tuple[list[dict], str, int]:
-    """remove(path, oldDV) + add(path, newDV) action pairs for the
-    matched (file -> positions) map; one shared DV file per commit.
-    Returns (actions, dv file path, newly-deleted row count)."""
-    from .dv import resolve_dv_positions, write_dv_file, z85_encode
-
-    adds_by_abs = {
-        os.path.abspath(_abs(f["path"])): f for f in snap.files
-    }
-    touched: list[tuple[dict, list[int]]] = []
-    rows_deleted = 0
-    for ap, new_pos in sorted(by_path.items()):
-        f = adds_by_abs.get(ap)
-        if f is None:
-            raise UnsupportedDeltaFeature(
-                f"matched rows in unknown file {ap}"
-            )
-        old_pos: list[int] = []
-        if f.get("foreign_dv"):
-            old_pos = resolve_dv_positions(f["foreign_dv"], table_path)
-        # a row index can never be deleted twice
-        merged = sorted(set(old_pos) | set(new_pos))
-        rows_deleted += len(merged) - len(old_pos)
-        touched.append((f, merged))
-
-    u = _uuid.uuid4()
-    dv_path = os.path.join(table_path, f"deletion_vector_{u}.bin")
-    frags = write_dv_file(dv_path, [m for _, m in touched])
-    enc = z85_encode(u.bytes)
-    actions: list[dict] = []
-    for (f, _merged), frag in zip(touched, frags):
-        raw = _serialize_add(
-            {
-                "path": f["path"],
-                "partition_values": f.get("partition_values") or {},
-                "size_bytes": f.get("size_bytes", 0),
-                "stats": f.get("stats"),
-                "data_change": True,
-            },
-            ts,
-        )
-        rm = {
-            "path": raw["path"],
-            "deletionTimestamp": ts,
-            "dataChange": True,
-        }
-        if f.get("foreign_dv"):
-            rm["deletionVector"] = f["foreign_dv"]
-        actions.append({"remove": rm})
-        raw["deletionVector"] = {
-            "storageType": "u",
-            "pathOrInlineDv": enc,
-            "offset": frag["offset"],
-            "sizeInBytes": frag["sizeInBytes"],
-            "cardinality": frag["cardinality"],
-        }
-        # row-id STABILITY: a DV re-add is the same physical file —
-        # its original baseRowId / defaultRowCommitVersion must ride
-        # along, or surviving rows would get invented ids
-        if f.get("base_row_id") is not None:
-            raw["baseRowId"] = f["base_row_id"]
-        if f.get("default_row_commit_version") is not None:
-            raw["defaultRowCommitVersion"] = f[
-                "default_row_commit_version"
-            ]
-        actions.append({"add": raw})
-    return actions, dv_path, rows_deleted
 
 
 # Legacy protocol versions imply features without listing them; a

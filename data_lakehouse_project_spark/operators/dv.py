@@ -397,3 +397,16 @@ def resolve_dv_positions(descriptor: dict, table_path: str) -> list[int]:
             f"bitmap holds {len(positions)}"
         )
     return positions
+
+
+def dv_file_path(descriptor: dict, table_path: str) -> str | None:
+    """Absolute path of the file a DV descriptor reads ("u" relative to
+    the table root, "p" as given); None for inline ("i") DVs, which
+    live in the log itself."""
+    storage = descriptor.get("storageType")
+    if storage == "u":
+        prefix, name = dv_relative_path(descriptor["pathOrInlineDv"])
+        return os.path.abspath(os.path.join(table_path, prefix, name))
+    if storage == "p":
+        return os.path.abspath(descriptor["pathOrInlineDv"])
+    return None

@@ -32,7 +32,7 @@ import os
 import time
 
 from .delta_reader import read_delta_snapshot
-from .dv import dv_relative_path
+from .dv import dv_file_path
 from .iceberg_reader import (
     _latest_metadata_file,
     _snapshot_order,
@@ -40,16 +40,6 @@ from .iceberg_reader import (
 )
 
 DEFAULT_RETENTION_MS = 7 * 24 * 3600 * 1000  # delta's 168h default
-
-
-def _dv_abs_path(descriptor: dict, table_path: str) -> str | None:
-    storage = descriptor.get("storageType")
-    if storage == "u":
-        prefix, name = dv_relative_path(descriptor["pathOrInlineDv"])
-        return os.path.abspath(os.path.join(table_path, prefix, name))
-    if storage == "p":
-        return os.path.abspath(descriptor["pathOrInlineDv"])
-    return None  # inline ("i") lives in the log itself
 
 
 def vacuum_delta(
@@ -72,16 +62,9 @@ def vacuum_delta(
         referenced.add(
             p if os.path.isabs(p) else os.path.join(table_path, p)
         )
-        for key in ("foreign_dv", "dv"):
-            d = f.get(key)
-            if not d:
-                continue
-            if key == "dv":  # internal lakehouse.dv: relative path
-                referenced.add(os.path.join(table_path, d["path"]))
-            else:
-                dp = _dv_abs_path(d, table_path)
-                if dp:
-                    referenced.add(dp)
+        dp = dv_file_path(f.get("foreign_dv") or {}, table_path)
+        if dp:
+            referenced.add(dp)
     now = now_ms if now_ms is not None else int(time.time() * 1000)
     cutoff = (now - retention_ms) / 1000.0
     deleted: list[str] = []

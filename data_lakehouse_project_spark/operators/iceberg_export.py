@@ -47,6 +47,7 @@ from data_lakehouse_project_spark.operators.txnlog import (
     TxnTable,
     _parse_partition_spec,
 )
+from data_lakehouse_project_spark.session import PARQUET_CODEC
 
 _EPOCH = datetime.date(1970, 1, 1)
 
@@ -545,54 +546,44 @@ def export_iceberg_metadata(
     # ---- deletion vectors -> v2 POSITION DELETE file + manifest ----
     # A DV-bearing snapshot exported as bare data files would
     # RESURRECT deleted rows in every Iceberg reader (caught by a
-    # round-7 probe); the internal (basename, pos) DV parquet converts
-    # losslessly to the spec's position-delete layout, written
-    # distributed and sorted by (file_path, pos) as required.
-    dv_files = [f for f in snap.files if f.get("dv")]
+    # round-7 probe); each spec DV decodes (driver-side, the reader's
+    # O(deleted rows) budget) into the position-delete layout, sorted
+    # by (file_path, pos) as the spec requires.
+    dv_files = [f for f in snap.files if f.get("foreign_dv")]
     delete_manifest_path = None
     n_pos_deletes = 0
     if dv_files:
-        import shutil
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        from pyspark.sql import functions as F
+        from data_lakehouse_project_spark.operators.dv import (
+            resolve_dv_positions,
+        )
 
-        base2full = {}
-        for f in dv_files:
-            fpath = f["path"]
-            if not os.path.isabs(fpath):
-                fpath = os.path.join(location, fpath)
-            base2full[f["path"].rsplit("/", 1)[-1]] = fpath
-        dv_dirs = sorted({f["dv"]["path"] for f in dv_files})
-        mapping = spark.createDataFrame(
-            list(base2full.items()), ["__b", "file_path"]
-        )
-        rows = (
-            spark.read.parquet(
-                *[os.path.join(table.path, d) for d in dv_dirs]
+        deletes = sorted(
+            (
+                f["path"]
+                if os.path.isabs(f["path"])
+                else os.path.join(location, f["path"]),
+                pos,
             )
-            .selectExpr(
-                "element_at(split(path, '/'), -1) AS __b", "pos"
-            )
-            .join(F.broadcast(mapping), "__b")
-            .select("file_path", F.col("pos").cast("long").alias("pos"))
-            .distinct()
-            .orderBy("file_path", "pos")
+            for f in dv_files
+            for pos in resolve_dv_positions(f["foreign_dv"], table.path)
         )
-        tmp_dir = os.path.join(meta_dir, f"_posdel_tmp_{uuid.uuid4().hex}")
-        rows.coalesce(1).write.mode("overwrite").parquet(tmp_dir)
-        part = next(
-            n for n in os.listdir(tmp_dir)
-            if n.endswith(".parquet") and not n.startswith("_")
-        )
-        del_name = f"pos-deletes-{snapshot_id}.parquet"
         del_path = os.path.join(location, "data")
         os.makedirs(del_path, exist_ok=True)
-        del_path = os.path.join(del_path, del_name)
-        shutil.move(os.path.join(tmp_dir, part), del_path)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        import pyarrow.parquet as _pq
-
-        n_pos_deletes = _pq.read_metadata(del_path).num_rows
+        del_path = os.path.join(del_path, f"pos-deletes-{snapshot_id}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "file_path": pa.array([d[0] for d in deletes], pa.string()),
+                    "pos": pa.array([d[1] for d in deletes], pa.int64()),
+                }
+            ),
+            del_path,
+            compression=PARQUET_CODEC,
+        )
+        n_pos_deletes = len(deletes)
         delete_manifest_path = os.path.join(
             meta_dir, f"{uuid.uuid4().hex}-d0.avro"
         )

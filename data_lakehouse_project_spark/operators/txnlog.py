@@ -36,8 +36,10 @@ set, each Delta/Iceberg-documented semantics re-expressed small:
 - **File-granularity DELETE/UPDATE** — one (stats-prunable) scan finds
   the files actually containing matches via ``_metadata.file_path``;
   only those rewrite. **Deletion vectors** (``delete_where(dv=True)``)
-  rewrite nothing: positions land in ``_dv/`` and readers apply a
-  size-gated broadcast anti-join on ``_metadata.row_index``;
+  rewrite nothing: positions land in one spec roaring-bitmap
+  ``deletion_vector_<uuid>.bin`` per commit, referenced by the re-added
+  files' ``deletionVector`` descriptors, and readers apply a size-gated
+  broadcast anti-join on ``_metadata.row_index``;
   ``optimize(purge_dv=True)`` is REORG-style materialization.
 - **RESTORE** to any retained version (metadata-only re-point),
   **shallow CLONE** (zero-copy absolute-path references, DV-aware),
@@ -55,10 +57,10 @@ reaped by ``vacuum``. Checkpoints only accelerate replay — corrupt ones
 are skipped (older checkpoint, then linear replay).
 
 Scale notes: the log is driver-side metadata — O(files) JSON, not data.
-Every ``CHECKPOINT_INTERVAL``-th commit also writes a checkpoint (the
-full active file set at that version, Delta-style), so snapshot replay
-reads one checkpoint + at most ``CHECKPOINT_INTERVAL`` commit files
-regardless of table age. Stats harvesting reads only footers (KBs per
+Every ``CHECKPOINT_INTERVAL``-th commit also writes a spec parquet
+checkpoint (the full active file set at that version), so snapshot
+replay reads one checkpoint + at most ``CHECKPOINT_INTERVAL`` commit
+files regardless of table age. Stats harvesting reads only footers (KBs per
 file). Data files are immutable — every mutation is copy-on-write at
 file granularity, exactly the Delta/Iceberg contract.
 """
@@ -69,51 +71,51 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import PARQUET_CODEC
+from .delta_log import (
+    _BUCKET_HASH_CONF_KEY,
+    _CONSTRAINT_CONF_PREFIX,
+    _PARTITION_SPEC_CONF_KEY,
+    LOG_DIR,  # noqa: F401 — callers locate the log as txnlog.LOG_DIR
+    CorruptDeltaLog,
+    DeltaSnapshot,
+    _commit_file,
+    _commit_versions,
+    _dv_pair_actions,
+    _intake_add,
+    _log_dir,
+    _parse_meta,
+    _parse_remove,
+    _read_commit_actions,
+    _serialize_add,
+    _serialize_remove,
+    _spark_path_key,
+    _write_classic_checkpoint,
+    drop_deleted_rows,
+    read_delta_snapshot,
+    sniff_commit_meta_protocol,
+)
+from .dv import dv_file_path
 
-LOG_DIR = "_delta_log"
-DV_DIR = "_dv"
 CDC_DIR = "_change_data"
-_VERSION_DIGITS = 20
 # every Nth commit also writes a full-snapshot checkpoint, bounding
 # replay to one checkpoint + <N commit files for any table age
 CHECKPOINT_INTERVAL = 10
 
-# ---- Delta-protocol serialization boundary (round 5) ----
+# ---- Delta-protocol log (round 5) ----
 #
 # Commit files are written in the PUBLISHED Delta transaction-protocol
 # shape (delta-io PROTOCOL.md): ``_delta_log/%020d.json`` holding one
-# action per line with the spec's field names — ``protocol``,
-# ``metaData`` (id/format/schemaString/partitionColumns/configuration),
-# ``add`` (path/partitionValues/size/modificationTime/dataChange/stats
-# as a JSON string of numRecords+minValues+maxValues+nullCount),
-# ``remove`` (path/deletionTimestamp/dataChange), ``txn``
-# (appId/version), ``commitInfo`` (freeform; carries ``timestamp``).
-# A stock Delta reader can replay this log; the offline harness pins
-# conformance with an independent spec-replay reader in
-# tests/test_delta_protocol.py (the delta-spark jar and duckdb's delta
-# extension are download-gated, probe recorded there).
-#
-# In-memory the module keeps its compact internal dicts (path /
-# size_bytes / partition_values / stats{num_rows, columns} / dv /
-# bloom); ``_serialize_*`` / ``_parse_*`` convert at the log boundary
-# only, so pruning, DV, bloom and CDF code paths are untouched.
-#
-# Non-protocol extensions ride in spec-sanctioned extension points:
-# CHECK constraints in ``metaData.configuration`` under
-# ``delta.constraints.<name>`` (exactly where Delta itself stores
-# them), the hidden-partition transform spec under a ``lakehouse.*``
-# configuration key, and per-file bloom/deletion-vector payloads in
-# ``add.tags`` (a spec-defined string map). Tables that use deletion
+# action per line; the action codec, the snapshot replay, the parquet
+# checkpoint writer and the deletion-vector encoding are the shared log
+# core in ``operators/delta_log.py``, so every table this module writes
+# is readable by the spec reader (``delta_reader.read_delta_table``)
+# and by any protocol-compliant engine. Tables that use deletion
 # vectors publish ``minReaderVersion 3 + readerFeatures
-# ["deletionVectors"]`` so a protocol-compliant external reader REFUSES
-# them (our DV layout is not Delta's roaring-bitmap format) instead of
-# silently resurrecting deleted rows; DV-free tables stay at
-# reader 1 / writer 2 and are externally readable.
+# ["deletionVectors"]``; DV-free tables stay at reader 1 / writer 2.
 
 _PROTOCOL_BASE = {"minReaderVersion": 1, "minWriterVersion": 2}
 _PROTOCOL_DV = {
@@ -122,110 +124,6 @@ _PROTOCOL_DV = {
     "readerFeatures": ["deletionVectors"],
     "writerFeatures": ["deletionVectors"],
 }
-_CONSTRAINT_CONF_PREFIX = "delta.constraints."
-_PARTITION_SPEC_CONF_KEY = "lakehouse.partitionBy"
-_BUCKET_HASH_CONF_KEY = "lakehouse.bucketHash"
-_TAG_DV = "lakehouse.dv"
-_TAG_BLOOM = "lakehouse.bloom"
-
-
-def _serialize_add(a: dict, ts_ms: int) -> dict:
-    from urllib.parse import quote
-
-    st = a.get("stats")
-    out = {
-        "path": quote(a["path"]),
-        "partitionValues": a.get("partition_values", {}),
-        "size": a.get("size_bytes", 0),
-        "modificationTime": ts_ms,
-        # compaction/clustering rewrites mark dataChange=false (the
-        # Delta contract: streams and CDF must treat them as no-ops)
-        "dataChange": bool(a.get("data_change", True)),
-    }
-    if st is not None:
-        cols = st.get("columns", {})
-        out["stats"] = json.dumps(
-            {
-                "numRecords": st.get("num_rows", 0),
-                "minValues": {
-                    c: v["min"] for c, v in cols.items() if "min" in v
-                },
-                "maxValues": {
-                    c: v["max"] for c, v in cols.items() if "max" in v
-                },
-                "nullCount": {
-                    c: v["null_count"]
-                    for c, v in cols.items()
-                    if "null_count" in v
-                },
-            }
-        )
-    tags = {}
-    if a.get("dv"):
-        tags[_TAG_DV] = json.dumps(a["dv"])
-    if a.get("bloom"):
-        tags[_TAG_BLOOM] = json.dumps(a["bloom"])
-    if tags:
-        out["tags"] = tags
-    return out
-
-
-def _parse_add(d: dict) -> dict:
-    from urllib.parse import unquote
-
-    a = {
-        "path": unquote(d["path"]),
-        "partition_values": d.get("partitionValues", {}),
-        "size_bytes": d.get("size", 0),
-        "data_change": bool(d.get("dataChange", True)),
-    }
-    raw = d.get("stats")
-    if raw:
-        st = json.loads(raw) if isinstance(raw, str) else raw
-        cols: dict[str, dict] = {}
-        for c, v in (st.get("minValues") or {}).items():
-            cols.setdefault(c, {})["min"] = v
-        for c, v in (st.get("maxValues") or {}).items():
-            cols.setdefault(c, {})["max"] = v
-        for c, v in (st.get("nullCount") or {}).items():
-            cols.setdefault(c, {})["null_count"] = v
-        a["stats"] = {"num_rows": st.get("numRecords", 0), "columns": cols}
-    tags = d.get("tags") or {}
-    if _TAG_DV in tags:
-        a["dv"] = json.loads(tags[_TAG_DV])
-    if _TAG_BLOOM in tags:
-        a["bloom"] = json.loads(tags[_TAG_BLOOM])
-    return a
-
-
-def _serialize_remove(r: dict, ts_ms: int) -> dict:
-    from urllib.parse import quote
-
-    out = {
-        "path": quote(r["path"]),
-        "deletionTimestamp": ts_ms,
-        "dataChange": bool(r.get("data_change", True)),
-    }
-    if r.get("dv"):
-        out["tags"] = {_TAG_DV: json.dumps(r["dv"])}
-    return out
-
-
-def _parse_remove(d: dict) -> dict:
-    from urllib.parse import unquote
-
-    r = {
-        "path": unquote(d["path"]),
-        "data_change": bool(d.get("dataChange", True)),
-    }
-    if d.get("partitionValues") is not None:
-        r["partition_values"] = d["partitionValues"]
-    if d.get("deletionVector"):  # foreign spec DV on the removed file
-        r["foreign_dv"] = d["deletionVector"]
-    tags = d.get("tags") or {}
-    if _TAG_DV in tags:
-        r["dv"] = json.loads(tags[_TAG_DV])
-    return r
 
 
 def _serialize_meta(
@@ -252,25 +150,6 @@ def _serialize_meta(
     }
 
 
-def _parse_meta(m: dict) -> dict:
-    conf = m.get("configuration") or {}
-    spec = conf.get(_PARTITION_SPEC_CONF_KEY)
-    partition_by = (
-        json.loads(spec) if spec else list(m.get("partitionColumns") or [])
-    )
-    constraints = {
-        k[len(_CONSTRAINT_CONF_PREFIX):]: v
-        for k, v in conf.items()
-        if k.startswith(_CONSTRAINT_CONF_PREFIX)
-    }
-    return {
-        "schema_json": m.get("schemaString"),
-        "partition_by": partition_by,
-        "constraints": constraints,
-        "bucket_hash": conf.get(_BUCKET_HASH_CONF_KEY),
-    }
-
-
 # lossless type promotions allowed as additive schema evolution; every
 # pair is readable by Spark's parquet upcast path (probe pinned in
 # test_txnlog.py). Narrowing is never in this set.
@@ -293,49 +172,6 @@ class SchemaMismatchError(ValueError):
 
 class ConstraintViolation(ValueError):
     """Written data violates a table CHECK constraint."""
-
-
-def _log_path(table: str) -> str:
-    return os.path.join(table, LOG_DIR)
-
-
-def _version_file(table: str, version: int) -> str:
-    return os.path.join(_log_path(table), f"{version:0{_VERSION_DIGITS}d}.json")
-
-
-def _list_versions(table: str) -> list[int]:
-    log = _log_path(table)
-    if not os.path.isdir(log):
-        return []
-    out = []
-    for name in os.listdir(log):
-        stem, ext = os.path.splitext(name)
-        if ext == ".json" and len(stem) == _VERSION_DIGITS and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
-
-
-def _checkpoint_file(table: str, version: int) -> str:
-    # NOT a Delta checkpoint: this is the module's private replay
-    # accelerator. The name deliberately matches no pattern in the Delta
-    # spec (%020d.checkpoint.parquet / .checkpoint.<uuid>.json), so
-    # protocol-compliant readers ignore it and replay the JSON commits.
-    return os.path.join(
-        _log_path(table), f"{version:0{_VERSION_DIGITS}d}.snapcache.json"
-    )
-
-
-def _list_checkpoints(table: str) -> list[int]:
-    log = _log_path(table)
-    if not os.path.isdir(log):
-        return []
-    out = []
-    for name in os.listdir(log):
-        if name.endswith(".snapcache.json"):
-            stem = name[: -len(".snapcache.json")]
-            if len(stem) == _VERSION_DIGITS and stem.isdigit():
-                out.append(int(stem))
-    return sorted(out)
 
 
 def _file_stats(fpath: str) -> dict:
@@ -440,24 +276,6 @@ def _partition_values(relpath: str) -> dict[str, str]:
 
 
 @dataclass
-class Snapshot:
-    version: int
-    files: list[dict]  # add actions: path/stats/partition_values
-    schema_json: str | None
-    timestamp_ms: int
-    constraints: dict = field(default_factory=dict)  # name -> CHECK sql
-    txns: dict = field(default_factory=dict)  # app_id -> last batch_id
-
-    @property
-    def num_rows(self) -> int:
-        return sum(
-            f.get("stats", {}).get("num_rows", 0)
-            - f.get("dv", {}).get("deleted_rows", 0)
-            for f in self.files
-        )
-
-
-@dataclass
 class TxnTable:
     """A delta-lite table rooted at ``path`` (local or any rename-capable
     filesystem mount). All state lives in the table dir; the object is a
@@ -468,14 +286,14 @@ class TxnTable:
     # ---------------- snapshot / read side ----------------
 
     def latest_version(self) -> int:
-        versions = _list_versions(self.path)
+        versions = _commit_versions(self.path)
         return versions[-1] if versions else -1
 
     def history(self) -> list[dict]:
         """commitInfo of every version, oldest first."""
         out = []
-        for v in _list_versions(self.path):
-            with open(_version_file(self.path, v)) as fh:
+        for v in _commit_versions(self.path):
+            with open(_commit_file(self.path, v)) as fh:
                 for line in fh:
                     action = json.loads(line)
                     if "commitInfo" in action:
@@ -484,253 +302,49 @@ class TxnTable:
 
     def snapshot(
         self, version: int | None = None, as_of_ms: int | None = None
-    ) -> Snapshot:
+    ) -> DeltaSnapshot:
         """Replay the log to ``version`` (or to the last commit at or
-        before ``as_of_ms``). Active files = adds minus removes. Replay
-        starts from the newest checkpoint at or before the target, so
-        cost is bounded by CHECKPOINT_INTERVAL commit files, not table
-        age."""
-        versions = _list_versions(self.path)
-        if not versions:
-            raise FileNotFoundError(f"no delta-lite log at {self.path}")
-        if as_of_ms is not None:
-            version = self._version_at(as_of_ms)
-        elif version is None:
-            version = versions[-1]
-        elif version not in versions:
-            raise ValueError(f"version {version} not in log (have {versions})")
-
-        active: dict[str, dict] = {}
-        schema_json = None
-        constraints: dict = {}
-        txns: dict = {}
-        ts = 0
-        version_seen = -1
-        start = versions[0]
-        # checkpoints only ACCELERATE replay — a torn/corrupt one (crash
-        # mid-write predates the tmp+rename, disk corruption after) must
-        # never brick the table: fall back to the next older checkpoint,
-        # then to pure linear replay. The commit files stay the source
-        # of truth.
-        for c in reversed(
-            [c for c in _list_checkpoints(self.path) if c <= version]
-        ):
-            try:
-                cp = self._read_checkpoint(c)
-                active = {f["path"]: f for f in cp["files"]}
-                schema_json = cp.get("schema_json")
-                constraints = cp.get("constraints", {})
-                txns = dict(cp.get("txns", {}))
-                ts = cp.get("timestamp_ms", 0)
-                version_seen = cp["version"]
-                start = cp["version"] + 1
-                break
-            except (OSError, ValueError, KeyError, TypeError):
-                continue  # corrupt checkpoint: try the next older one
-        for v in versions:
-            if v < start:
-                continue
-            if v > version:
-                break
-            adds, removes, info, meta, txn = self._read_commit(v)
-            for r in removes:
-                active.pop(r["path"], None)
-            for a in adds:
-                active[a["path"]] = a
-            if meta is not None:
-                schema_json = meta.get("schema_json")
-                # commits predating the constraints feature carry no
-                # key → the prior state persists (compat)
-                if meta.get("constraints") is not None:
-                    constraints = meta["constraints"]
-            if txn is not None:
-                txns[txn["app_id"]] = max(
-                    txns.get(txn["app_id"], -1), txn["batch_id"]
-                )
-            ts = info["timestamp"]
-            version_seen = v
-        return Snapshot(
-            version=version_seen,
-            files=list(active.values()),
-            schema_json=schema_json,
-            timestamp_ms=ts,
-            constraints=constraints,
-            txns=txns,
-        )
-
-    def _version_at(self, as_of_ms: int) -> int:
-        """Largest version whose commit timestamp is <= as_of_ms (reads
-        only commitInfo lines)."""
-        best = None
-        for v in _list_versions(self.path):
-            _, _, info, _, _ = self._read_commit(v)
-            if info["timestamp"] <= as_of_ms:
-                best = v
-            else:
-                break
-        if best is None:
-            raise ValueError(f"no commit at or before as_of_ms={as_of_ms}")
-        return best
-
-    def _read_checkpoint(self, version: int) -> dict:
-        with open(_checkpoint_file(self.path, version)) as fh:
-            return json.load(fh)
+        before ``as_of_ms``) through the spec reader's replay
+        (``delta_log.read_delta_snapshot``): the newest parquet
+        checkpoint at or before the target plus at most
+        ``CHECKPOINT_INTERVAL`` commit files, whatever the table's age.
+        Active files = adds minus removes."""
+        try:
+            return read_delta_snapshot(
+                self.path, version=version, timestamp_ms=as_of_ms
+            )
+        except CorruptDeltaLog:
+            if self.latest_version() < 0:
+                raise FileNotFoundError(
+                    f"no delta-lite log at {self.path}"
+                ) from None
+            raise
 
     def _maybe_checkpoint(self, version: int) -> None:
-        """Best-effort checkpoint write after every Nth commit — a
-        failure here never fails the commit (the linear log remains the
-        source of truth; checkpoints only accelerate replay).
-
-        Two artifacts per checkpoint version: the private
-        ``.snapcache.json`` (the internal reader's fast path) and a
-        SPEC-SHAPED Delta checkpoint — ``%020d.checkpoint.parquet``
-        holding one action per row (protocol / metaData / txn / add
-        struct columns) plus the ``_last_checkpoint`` pointer — so an
-        external Delta reader can bootstrap replay from the parquet
-        checkpoint exactly as it would on a real Delta table."""
+        """Best-effort spec checkpoint after every Nth commit —
+        ``%020d.checkpoint.parquet`` (protocol / metaData / txn / add
+        rows) plus the ``_last_checkpoint`` pointer, written by the one
+        classic-checkpoint writer (``delta_log``). A failure here never
+        fails the commit: the JSON log stays the source of truth and
+        checkpoints only accelerate replay."""
         if version <= 0 or version % CHECKPOINT_INTERVAL:
             return
         try:
             snap = self.snapshot(version=version)
-            payload = {
-                "version": version,
-                "timestamp_ms": snap.timestamp_ms,
-                "schema_json": snap.schema_json,
-                "constraints": snap.constraints,
-                "txns": snap.txns,
-                "files": snap.files,
-            }
-            tmp = os.path.join(
-                _log_path(self.path), f".tmpcp-{uuid.uuid4().hex}.json"
+            # every commit carries both: take them raw from this one
+            meta, protocol = sniff_commit_meta_protocol(self.path, version)
+            ts = snap.timestamp_ms
+            _write_classic_checkpoint(
+                self.path,
+                protocol,
+                meta,
+                [_serialize_add(f, ts) for f in snap.files],
+                version,
+                txns=snap.txns,
+                ts_ms=ts,
             )
-            with open(tmp, "w") as fh:
-                json.dump(payload, fh)
-            os.replace(tmp, _checkpoint_file(self.path, version))
-        except OSError:
-            pass
-        try:
-            self._write_delta_checkpoint(version)
         except Exception:
-            pass  # spec checkpoint is an interop nicety, never load-bearing
-
-    def _write_delta_checkpoint(self, version: int) -> None:
-        """Delta-spec parquet checkpoint: the full replay state at
-        ``version`` as one action per row, then the ``_last_checkpoint``
-        pointer. Readers that honor it skip every compacted JSON commit;
-        the JSON log stays authoritative for ours."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        # raw (already Delta-shaped) protocol/metaData from the commit
-        # file at `version` — every commit carries both
-        protocol = metadata = None
-        with open(_version_file(self.path, version)) as fh:
-            for line in fh:
-                action = json.loads(line)
-                if "protocol" in action:
-                    protocol = action["protocol"]
-                elif "metaData" in action:
-                    metadata = action["metaData"]
-        snap = self.snapshot(version=version)
-        ts = snap.timestamp_ms
-
-        def _m(d):  # map<string,string> as tuple list for pyarrow
-            return [(str(k), str(v)) for k, v in (d or {}).items()]
-
-        rows = [{"protocol": protocol}, {"metaData": {
-            **metadata, "configuration": _m(metadata.get("configuration")),
-            "format": {
-                "provider": metadata["format"]["provider"],
-                "options": _m(metadata["format"].get("options")),
-            },
-        }}]
-        rows += [
-            {"txn": {"appId": app, "version": batch, "lastUpdated": ts}}
-            for app, batch in sorted(snap.txns.items())
-        ]
-        for f in snap.files:
-            add = _serialize_add(f, ts)
-            add["partitionValues"] = _m(add.get("partitionValues"))
-            if "tags" in add:
-                add["tags"] = _m(add["tags"])
-            rows.append({"add": add})
-
-        str_map = pa.map_(pa.string(), pa.string())
-        schema = pa.schema(
-            [
-                (
-                    "protocol",
-                    pa.struct(
-                        [
-                            ("minReaderVersion", pa.int32()),
-                            ("minWriterVersion", pa.int32()),
-                            ("readerFeatures", pa.list_(pa.string())),
-                            ("writerFeatures", pa.list_(pa.string())),
-                        ]
-                    ),
-                ),
-                (
-                    "metaData",
-                    pa.struct(
-                        [
-                            ("id", pa.string()),
-                            (
-                                "format",
-                                pa.struct(
-                                    [
-                                        ("provider", pa.string()),
-                                        ("options", str_map),
-                                    ]
-                                ),
-                            ),
-                            ("schemaString", pa.string()),
-                            ("partitionColumns", pa.list_(pa.string())),
-                            ("configuration", str_map),
-                            ("createdTime", pa.int64()),
-                        ]
-                    ),
-                ),
-                (
-                    "txn",
-                    pa.struct(
-                        [
-                            ("appId", pa.string()),
-                            ("version", pa.int64()),
-                            ("lastUpdated", pa.int64()),
-                        ]
-                    ),
-                ),
-                (
-                    "add",
-                    pa.struct(
-                        [
-                            ("path", pa.string()),
-                            ("partitionValues", str_map),
-                            ("size", pa.int64()),
-                            ("modificationTime", pa.int64()),
-                            ("dataChange", pa.bool_()),
-                            ("stats", pa.string()),
-                            ("tags", str_map),
-                        ]
-                    ),
-                ),
-            ]
-        )
-        table = pa.Table.from_pylist(rows, schema=schema)
-        log = _log_path(self.path)
-        tmp = os.path.join(log, f".tmpdcp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp, compression=PARQUET_CODEC)
-        os.replace(
-            tmp,
-            os.path.join(
-                log, f"{version:0{_VERSION_DIGITS}d}.checkpoint.parquet"
-            ),
-        )
-        last = {"version": version, "size": len(rows)}
-        tmp2 = os.path.join(log, f".tmplast-{uuid.uuid4().hex}.json")
-        with open(tmp2, "w") as fh:
-            json.dump(last, fh)
-        os.replace(tmp2, os.path.join(log, "_last_checkpoint"))
+            pass
 
     def read(
         self,
@@ -1314,17 +928,25 @@ class TxnTable:
         ``dv=True`` (merge-on-read, Delta deletion vectors): NO data
         file is rewritten. The matching (file, row-position) pairs —
         unioned with any positions already deleted from those files —
-        are written once to ``_dv/dv-<uuid>/`` and the touched files are
-        re-added pointing at it; readers apply the DV as a broadcast
-        anti-join. The at-scale trade: deletes cost O(deleted rows)
-        IO instead of O(touched files), at a small per-read filter cost
-        until ``optimize`` materializes the deletions away.
+        are written once to a spec ``deletion_vector_<uuid>.bin`` and
+        each touched file is removed and re-added with its new
+        ``deletionVector`` (the pairs the foreign writer commits too);
+        readers apply the DV as a broadcast anti-join. The at-scale
+        trade: deletes cost O(deleted rows) IO instead of O(touched
+        files), at a small per-read filter cost until ``optimize``
+        materializes the deletions away.
 
         Returns the committed version, or the current version unchanged
         when no row matches (no empty commits).
         """
         from pyspark.sql import functions as F
 
+        if cdc and dv:
+            raise ValueError(
+                "cdc=True with dv=True is not supported: the CDF "
+                "contract ships materialized change rows, which a "
+                "merge-on-read delete deliberately avoids writing"
+            )
         read_version = self.latest_version()
         snap = self.snapshot()
         partition_by = self._current_partition_by()
@@ -1339,31 +961,41 @@ class TxnTable:
             spark, candidates, snap.schema_json, with_lineage=True
         )
         matches = scan.where(predicate_sql)
-        hit_paths = {
-            r.p
-            for r in matches.select(F.col("_dl_path").alias("p"))
-            .distinct()
-            .collect()
-        }
-        touched = [f for f in candidates if f["path"] in hit_paths]
+        path = F.col("_dl_path").alias("p")
+        if dv:
+            # one job: the matched row positions, grouped per file
+            hit_pos = {
+                r.p: r.pos
+                for r in matches.groupBy(path)
+                .agg(F.collect_list("_dl_pos").alias("pos"))
+                .collect()
+            }
+        else:
+            hit_pos = {
+                r.p: None for r in matches.select(path).distinct().collect()
+            }
+        touched = [f for f in candidates if f["path"] in hit_pos]
         if not touched:
             return read_version
-        removes = [_remove_action(f) for f in touched]
-        cdc_actions = None
-        if cdc:
-            if dv:
-                raise ValueError(
-                    "cdc=True with dv=True is not supported: the CDF "
-                    "contract ships materialized change rows, which a "
-                    "merge-on-read delete deliberately avoids writing"
-                )
-            cdc_actions = self._stage_cdc(
-                matches.drop("_dl_path", "_dl_pos").withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                partition_by,
+        if dv:
+            actions, _, rows_deleted = _dv_pair_actions(
+                self.path,
+                snap,
+                {os.path.abspath(self._abs(p)): v for p, v in hit_pos.items()},
+                self._abs,
+                int(time.time() * 1000),
             )
-        if not dv:
+            adds = [_intake_add(a["add"]) for a in actions if "add" in a]
+            removes = [
+                _parse_remove(a["remove"]) for a in actions if "remove" in a
+            ]
+            info = {
+                "mode": "dv",
+                "files_with_dv": len(touched),
+                "rows_deleted": rows_deleted,
+            }
+            cdc_actions = None
+        else:
             # NULL-predicate rows are NOT deleted (SQL DELETE
             # semantics), so keep = NOT coalesce(pred, false)
             kept = (
@@ -1372,79 +1004,25 @@ class TxnTable:
                         F.expr(f"({predicate_sql})"), F.lit(False)
                     )
                 )
-                .where(F.col("_dl_path").isin(sorted(hit_paths)))
+                .where(F.col("_dl_path").isin(sorted(hit_pos)))
                 .drop("_dl_path", "_dl_pos")
             )
             adds = self._stage_data(kept, partition_by)
+            removes = [_remove_action(f) for f in touched]
             info = {
                 "files_rewritten": len(touched),
                 "files_skipped": len(snap.files) - len(touched),
             }
-        else:
-            # DV rows key on the file BASENAME — part files are minted
-            # with uuid names, so the basename is globally unique and
-            # stays stable whether the action holds the file by relative
-            # path or (shallow clone) by absolute path. Older DVs that
-            # stored full paths still read back (the anti-join splits on
-            # '/' either way); normalizing here also makes the dedupe
-            # distinct() exact across path styles.
-            base = F.element_at(F.split(F.col("_dl_path"), "/"), -1)
-            new_dv = matches.select(
-                base.alias("path"), F.col("_dl_pos").alias("pos")
-            )
-            old_dirs = sorted(
-                {f["dv"]["path"] for f in touched if f.get("dv")}
-            )
-            hit_files = sorted(
-                {p.rsplit("/", 1)[-1] for p in hit_paths}
-            )
-            if old_dirs:
-                old = (
-                    spark.read.parquet(
-                        *[os.path.join(self.path, d) for d in old_dirs]
-                    )
-                    .select(
-                        F.element_at(
-                            F.split(F.col("path"), "/"), -1
-                        ).alias("path"),
-                        "pos",
-                    )
-                    .where(F.col("path").isin(hit_files))
+            cdc_actions = (
+                self._stage_cdc(
+                    matches.drop("_dl_path", "_dl_pos").withColumn(
+                        "_change_type", F.lit("delete")
+                    ),
+                    partition_by,
                 )
-                new_dv = new_dv.unionByName(old).distinct()
-            dv_rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
-            new_dv.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.path, dv_rel)
+                if cdc
+                else None
             )
-            counts = {
-                r.path: r.cnt
-                for r in spark.read.parquet(
-                    os.path.join(self.path, dv_rel)
-                )
-                .groupBy("path")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            adds = [
-                {
-                    **f,
-                    "dv": {
-                        "path": dv_rel,
-                        "deleted_rows": int(
-                            counts.get(f["path"].rsplit("/", 1)[-1], 0)
-                        ),
-                    },
-                }
-                for f in touched
-            ]
-            info = {
-                "mode": "dv",
-                "files_with_dv": len(touched),
-                "rows_deleted": sum(counts.values())
-                - sum(
-                    f.get("dv", {}).get("deleted_rows", 0) for f in touched
-                ),
-            }
         return self._commit(
             operation="delete",
             read_version=read_version,
@@ -1622,16 +1200,18 @@ class TxnTable:
         ``version`` clones a historical snapshot (time-travel clone)."""
         snap = self.snapshot(version=version)
         src_root = os.path.abspath(self.path)
-
-        def _abs(p: str) -> str:
-            return p if os.path.isabs(p) else os.path.join(src_root, p)
-
         adds = []
         for f in snap.files:
             g = dict(f)
-            g["path"] = _abs(g["path"])
-            if g.get("dv"):
-                g["dv"] = {**g["dv"], "path": _abs(g["dv"]["path"])}
+            g["path"] = os.path.join(src_root, g["path"])  # abs stays abs
+            dv_path = dv_file_path(g.get("foreign_dv") or {}, src_root)
+            if dv_path:
+                # table-relative 'u' DVs become absolute 'p' references
+                g["foreign_dv"] = {
+                    **g["foreign_dv"],
+                    "storageType": "p",
+                    "pathOrInlineDv": dv_path,
+                }
             adds.append(g)
         clone = TxnTable(target_path)
         if clone.latest_version() >= 0:
@@ -1668,11 +1248,11 @@ class TxnTable:
             ),
             "num_rows": snap.num_rows,
             "files_with_dv": sum(
-                1 for f in snap.files if f.get("dv")
+                1 for f in snap.files if f.get("foreign_dv")
             ),
             "partition_by": self._current_partition_by(),
             "constraints": dict(snap.constraints),
-            "num_commits": len(_list_versions(self.path)),
+            "num_commits": len(_commit_versions(self.path)),
         }
 
     def _attach_blooms(
@@ -1972,7 +1552,7 @@ class TxnTable:
                 # still materializes deletion vectors away: rewrite
                 # JUST the DV-carrying files, keeping their count
                 if purge_dv:
-                    fs = [f for f in fs if f.get("dv")]
+                    fs = [f for f in fs if f.get("foreign_dv")]
                     if not fs:
                         continue
                     df = self._read_files(spark, fs, snap.schema_json)
@@ -2068,7 +1648,7 @@ class TxnTable:
 
         versions = [
             v
-            for v in _list_versions(self.path)
+            for v in _commit_versions(self.path)
             if v >= starting_version
             and (ending_version is None or v <= ending_version)
         ]
@@ -2125,30 +1705,30 @@ class TxnTable:
         files no commit ever referenced. Returns deleted relative paths.
         Time travel older than the horizon is gone after vacuum — the
         standard retention trade."""
-        versions = _list_versions(self.path)
+        versions = _commit_versions(self.path)
         if not versions:
             return []
         retained = versions[-max(1, keep_versions):]
+        root = os.path.abspath(self.path)
         live: set[str] = set()
-        live_dv: set[str] = set()
         for v in retained:
             for f in self.snapshot(version=v).files:
                 live.add(f["path"])
-                if f.get("dv"):
-                    live_dv.add(f["dv"]["path"])
+                live.add(dv_file_path(f.get("foreign_dv") or {}, root))
         deleted = []
         for rel in _data_files(self.path):
             if rel not in live:
                 os.remove(os.path.join(self.path, rel))
                 deleted.append(rel)
-        # deletion-vector dirs referenced by no retained snapshot
-        dv_root = os.path.join(self.path, DV_DIR)
-        if os.path.isdir(dv_root):
-            for name in os.listdir(dv_root):
-                rel = os.path.join(DV_DIR, name)
-                if rel not in live_dv:
-                    _rmtree_quiet(os.path.join(dv_root, name))
-                    deleted.append(rel)
+        # deletion-vector files referenced by no retained snapshot
+        for name in os.listdir(root):
+            if (
+                name.startswith("deletion_vector_")
+                and name.endswith(".bin")
+                and os.path.join(root, name) not in live
+            ):
+                os.remove(os.path.join(root, name))
+                deleted.append(name)
         # change-data-feed files referenced by no RETAINED commit: CDF
         # over vacuumed history hard-errors (like time travel), so the
         # files follow the same retention horizon
@@ -2157,7 +1737,7 @@ class TxnTable:
             live_cdc: set[str] = set()
             for v in retained:
                 try:
-                    with open(_version_file(self.path, v)) as fh:
+                    with open(_commit_file(self.path, v)) as fh:
                         for line in fh:
                             line = line.strip()
                             if not line:
@@ -2213,12 +1793,12 @@ class TxnTable:
         least ``path``), read with the given table schema so partition
         columns survive and evolved-away columns surface as null.
 
-        File actions carrying a deletion vector (``dv``) have their
-        deleted positions filtered out via a BROADCAST left-anti join on
-        (relative path, ``_metadata.row_index``) — merge-on-read, a
-        map-side hash filter with no shuffle of the data. DV rows for
-        paths not in ``files`` never match (rewrites always mint fresh
-        file names), so unioning every referenced DV dir is safe.
+        File actions carrying a deletion vector (``foreign_dv``) have
+        their deleted positions filtered out by the spec reader's
+        anti-join on (file path, ``_metadata.row_index``)
+        (``delta_log.drop_deleted_rows``) — merge-on-read, a map-side
+        hash filter with no shuffle of the data while it is
+        broadcast-sized.
 
         ``with_lineage=True`` keeps ``_dl_path`` / ``_dl_pos`` columns
         (table-relative file path, row position) for callers that need
@@ -2252,8 +1832,8 @@ class TxnTable:
                 groups.setdefault(self.path, []).append(
                     os.path.join(self.path, p)
                 )
-        dv_dirs = sorted({f["dv"]["path"] for f in files if f.get("dv")})
-        lineage = bool(dv_dirs) or with_lineage
+        has_dv = any(f.get("foreign_dv") for f in files)
+        lineage = has_dv or with_lineage
         parts = []
         for base, paths in sorted(groups.items()):
             part = _reader().option("basePath", base).parquet(*paths)
@@ -2267,58 +1847,34 @@ class TxnTable:
             if lineage:
                 # metadata pseudo-columns resolve only on the scan
                 # relation — materialize them per group, pre-union
-                part = part.withColumns(
-                    {
-                        "_dl_path": self._rel_path_col(),
-                        "_dl_pos": F.col("_metadata.row_index"),
-                    }
-                )
+                cols = {
+                    "_dl_path": self._rel_path_col(),
+                    "_dl_pos": F.col("_metadata.row_index"),
+                }
+                if has_dv:
+                    cols["_dl_abs"] = _spark_path_key()
+                part = part.withColumns(cols)
             parts.append(part)
         df = reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
-        if not lineage:
-            return df
-        if dv_dirs:
-            # keys match on FILE BASENAME: part files are minted with a
-            # uuid name at stage time, so the basename is globally
-            # unique — and stays comparable when a shallow clone holds
-            # the file by absolute path while its DV (recorded by the
-            # source) stores the source-relative form
-            dv = (
-                spark.read.parquet(
-                    *[os.path.join(self.path, d) for d in dv_dirs]
-                )
-                .selectExpr(
-                    "element_at(split(path, '/'), -1) AS _dl_dv_file",
-                    "pos as _dl_dv_pos",
-                )
-            )
-            # broadcast the DV only while it's broadcast-sized (the
-            # recorded cardinalities are driver-known); a huge deletion
-            # set falls back to a plain anti-join and AQE decides
-            n_deleted = sum(
-                f.get("dv", {}).get("deleted_rows", 0) for f in files
-            )
-            if n_deleted <= 5_000_000:
-                dv = F.broadcast(dv)
-            df = df.join(
-                dv,
-                (
-                    F.element_at(F.split(F.col("_dl_path"), "/"), -1)
-                    == F.col("_dl_dv_file")
-                )
-                & (F.col("_dl_pos") == F.col("_dl_dv_pos")),
-                "left_anti",
-            )
+        if has_dv:
+            df = drop_deleted_rows(
+                spark, df, files, self.path, self._abs, "_dl_abs", "_dl_pos"
+            ).drop("_dl_abs")
         return df if with_lineage else df.drop("_dl_path", "_dl_pos")
+
+    def _abs(self, p: str) -> str:
+        """A file action's path on disk (shallow clones hold absolute
+        paths, everything else is table-relative)."""
+        return os.path.join(self.path, p)
 
     def _current_meta(self) -> dict:
         """The newest commit's parsed metaData ({} when none)."""
-        for v in reversed(_list_versions(self.path)):
-            _, _, _, meta, _ = self._read_commit(v)
+        for v in reversed(_commit_versions(self.path)):
+            meta, _ = sniff_commit_meta_protocol(self.path, v)
             if meta is not None:
-                return meta
+                return _parse_meta(meta)
         return {}
 
     def _current_partition_by(self) -> list[str]:
@@ -2366,39 +1922,24 @@ class TxnTable:
             )
 
     def _read_commit(self, version: int):
-        """Parse one Delta-protocol commit file back into the module's
-        internal action dicts (``_parse_*`` at the boundary)."""
-        adds, removes, info, meta = [], [], None, None
-        txn = None
-        with open(_version_file(self.path, version)) as fh:
-            for line in fh:
-                action = json.loads(line)
-                if "add" in action:
-                    adds.append(_parse_add(action["add"]))
-                elif "remove" in action:
-                    removes.append(_parse_remove(action["remove"]))
-                elif "commitInfo" in action:
-                    info = action["commitInfo"]
-                elif "metaData" in action:
-                    meta = _parse_meta(action["metaData"])
-                elif "txn" in action:
-                    txn = {
-                        "app_id": action["txn"]["appId"],
-                        "batch_id": action["txn"]["version"],
-                    }
-        return adds, removes, info, meta, txn
+        """One commit's (adds, removes, commitInfo, parsed metaData or
+        None, txn actions) through the shared action codec."""
+        adds, removes, info, meta, _, txns, _ = _read_commit_actions(
+            self.path, version
+        )
+        return adds, removes, info, meta and _parse_meta(meta), txns
 
     def _prev_commit_identity(self, prev_version: int):
         """(table_id, dv_protocol_active) from the previous commit —
         one O(1) file scan; every commit carries metaData + protocol.
         The DV protocol flag is STICKY: once a table publishes
         readerFeatures=["deletionVectors"] it never downgrades while
-        our non-Delta DV layout may still be referenced by live or
+        deletion vectors may still be referenced by live or
         time-travel snapshots."""
         table_id, dv_active = None, False
         if prev_version >= 0:
             try:
-                with open(_version_file(self.path, prev_version)) as fh:
+                with open(_commit_file(self.path, prev_version)) as fh:
                     for line in fh:
                         action = json.loads(line)
                         if "metaData" in action:
@@ -2508,7 +2049,7 @@ class TxnTable:
         link it to the next version slot. Losing a race means someone
         else owns that version — blind appends retry at the new tip;
         read-dependent operations raise ConcurrentWriteConflict."""
-        os.makedirs(_log_path(self.path), exist_ok=True)
+        os.makedirs(_log_dir(self.path), exist_ok=True)
         if constraints is None:  # carry the table's current constraints
             constraints = self._current_constraints()
         # bucket-transform hash lineage: staging uses the Iceberg
@@ -2533,8 +2074,8 @@ class TxnTable:
                 bucket_hash = "murmur3"
             else:
                 bucket_hash = "mixed"
-        dv_in_commit = any(a.get("dv") for a in adds) or any(
-            r.get("dv") for r in removes
+        dv_in_commit = any(a.get("foreign_dv") for a in adds) or any(
+            r.get("foreign_dv") for r in removes
         )
         fresh_table_id = str(uuid.uuid4())  # used only for version 0
         attempt_version = read_version + 1
@@ -2598,13 +2139,13 @@ class TxnTable:
                 json.dumps({"cdc": c}) for c in (cdc_actions or [])
             ]
             tmp = os.path.join(
-                _log_path(self.path), f".tmp-{uuid.uuid4().hex}.json"
+                _log_dir(self.path), f".tmp-{uuid.uuid4().hex}.json"
             )
             with open(tmp, "w") as fh:
                 fh.write("\n".join(lines) + "\n")
                 fh.flush()
                 os.fsync(fh.fileno())
-            target = _version_file(self.path, attempt_version)
+            target = _commit_file(self.path, attempt_version)
             try:
                 os.link(tmp, target)  # atomic create-if-absent
                 os.remove(tmp)
@@ -2877,10 +2418,7 @@ def _remove_action(f: dict) -> dict:
     """Remove action for a file action — carries the file's deletion
     vector (when present) so CDF pre-images exclude already-deleted
     rows. Snapshot replay keys removes by path only."""
-    out = {"path": f["path"]}
-    if f.get("dv"):
-        out["dv"] = f["dv"]
-    return out
+    return {"path": f["path"], "foreign_dv": f.get("foreign_dv")}
 
 
 def _file_may_match(

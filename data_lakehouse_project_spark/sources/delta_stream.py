@@ -54,6 +54,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from data_lakehouse_project_spark.operators.delta_log import _parse_meta
 from data_lakehouse_project_spark.operators.delta_reader import (
     CorruptDeltaLog,
     UnsupportedDeltaFeature,
@@ -63,7 +64,6 @@ from data_lakehouse_project_spark.operators.delta_reader import (
     read_delta_snapshot,
     sniff_commit_meta_protocol,
 )
-from data_lakehouse_project_spark.operators.txnlog import _parse_meta
 
 
 class _DeltaFilePartition(InputPartition):
@@ -351,12 +351,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
             boot = int(start["bootstrap"])
             snap = read_delta_snapshot(self._table, version=boot)
             for f in snap.files:
-                if f.get("dv"):
-                    raise UnsupportedDeltaFeature(
-                        "bootstrap snapshot carries a lakehouse.dv "
-                        "internal deletion vector; use the internal "
-                        "reader"
-                    )
                 # spec DVs apply as per-file excluded row indexes —
                 # the snapshot's LIVE rows ship, deleted rows don't
                 excl = None
@@ -436,11 +430,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
                 continue
             for a in adds:
                 excl = None
-                if a.get("dv"):
-                    raise UnsupportedDeltaFeature(
-                        f"commit {v} carries a lakehouse.dv internal "
-                        "deletion vector; use the internal reader"
-                    )
                 if a.get("foreign_dv"):
                     # shipping the whole file would RESURRECT the
                     # DV-deleted rows.  Under ignoreChanges (the
@@ -587,11 +576,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
         for path in paired:
             # same path removed+re-added: the modern DV-delete commit
             a, r = adds_by_path[path], removes_by_path[path]
-            if a.get("dv") or r.get("dv"):
-                raise UnsupportedDeltaFeature(
-                    f"commit {v} carries a lakehouse.dv internal "
-                    "deletion vector; use the internal reader"
-                )
             old_dv = r.get("foreign_dv") or (
                 (_prior(path) or {}).get("foreign_dv")
             )
@@ -618,11 +602,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
                           positions=restored)
                 )
         for a in loose_adds:
-            if a.get("dv"):
-                raise UnsupportedDeltaFeature(
-                    f"commit {v} carries a lakehouse.dv internal "
-                    "deletion vector; use the internal reader"
-                )
             excl = sorted(_dv_positions(a.get("foreign_dv"))) or None
             parts.append(
                 _part(
@@ -633,11 +612,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
                 )
             )
         for r in loose_removes:
-            if r.get("dv"):
-                raise UnsupportedDeltaFeature(
-                    f"commit {v} carries a lakehouse.dv internal "
-                    "deletion vector; use the internal reader"
-                )
             pv = r.get("partition_values")
             if pv is None and self._part_cols:
                 pv = ((_prior(r["path"]) or {}).get("partition_values"))

@@ -247,11 +247,10 @@ def read_delta(
 ) -> DataFrame:
     """Delta table scan — any ``_delta_log``, regardless of writer.
 
-    Tables written by this engine's ``TxnTable`` (whose log is
-    Delta-protocol-shaped but may use extensions an external reader
-    can't honor — our DV layout, hive-dir partition reconstruction)
-    route through the internal replayer with full feature support;
-    FOREIGN logs (delta-spark, delta-rs, ...) replay through
+    Tables written by this engine's ``TxnTable`` route through
+    ``TxnTable.read``, which adds the engine's extensions on top of
+    the shared replay (hidden-partition and bloom pruning); FOREIGN
+    logs (delta-spark, delta-rs, ...) read through
     ``operators/delta_reader.py`` under the spec's protocol gating,
     parquet-checkpoint bootstrap, and log-only partition values. The
     split keys on the ``lakehouse.partitionBy`` configuration entry
@@ -261,7 +260,7 @@ def read_delta(
     from data_lakehouse_project_spark.operators.delta_reader import (
         _commit_versions,
         read_delta_table,
-        sniff_commit_metadata,
+        sniff_commit_meta_protocol,
     )
     from data_lakehouse_project_spark.operators.txnlog import (
         _PARTITION_SPEC_CONF_KEY,
@@ -271,9 +270,7 @@ def read_delta(
     internal = False
     versions = _commit_versions(path)
     for v in reversed(versions):  # newest commit carrying metaData
-        # metaData-only sniff: MUST NOT validate add actions — an
-        # internal DV-bearing table would be refused before routing
-        meta_raw = sniff_commit_metadata(path, v)
+        meta_raw, _ = sniff_commit_meta_protocol(path, v)
         if meta_raw is not None:
             internal = _PARTITION_SPEC_CONF_KEY in (
                 meta_raw.get("configuration") or {}

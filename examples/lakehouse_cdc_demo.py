@@ -121,6 +121,16 @@ def main() -> None:
         orders.describe_detail()["files_with_dv"],
         "file(s) carry a deletion vector, zero rewritten",
     )
+    # the DVs are spec roaring bitmaps (deletion_vector_<uuid>.bin), so
+    # the protocol-level reader sees exactly the engine's rows
+    from data_lakehouse_project_spark.operators.delta_reader import (
+        read_delta_table,
+    )
+
+    assert (
+        read_delta_table(spark, orders.path).count()
+        == orders.read(spark).count()
+    )
     orders.restore(v_before_dv)  # undo it — one metadata commit
     print("restored rows:", orders.read(spark).count())
 

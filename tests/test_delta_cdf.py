@@ -83,12 +83,21 @@ def test_rewrite_without_cdc_refused(spark, tmp_path):
     assert sorted(r.id for r in got.collect()) == [4, 5]
 
 
-def test_dv_commit_refused(spark, tmp_path):
+def test_engine_dv_commit_reads_as_deletes(spark, tmp_path):
+    """The engine's DV delete is a spec remove(path, oldDV) +
+    add(path, newDV) pair, so the feed reconstructs it from the DV
+    diff: exactly the deleted rows, as deletes."""
     t = TxnTable(str(tmp_path / "tdv"))
     t.write(_batch(spark, 0, 6), mode="overwrite")
-    t.delete_where(spark, "id < 2", dv=True)
-    with pytest.raises(UnsupportedDeltaFeature, match="deletion"):
-        read_delta_changes(spark, t.path)
+    v = t.delete_where(spark, "id < 2", dv=True)
+    got = sorted(
+        (r.id, r._change_type, r._commit_version)
+        for r in read_delta_changes(spark, t.path).collect()
+    )
+    assert [g for g in got if g[2] == v] == [
+        (0, "delete", v), (1, "delete", v),
+    ]
+    assert sorted(g[0] for g in got if g[2] == 0) == list(range(6))
 
 
 def test_cdc_actions_take_precedence(spark, tmp_path):

@@ -346,10 +346,10 @@ def test_sync_schema_evolution_keeps_table_id(spark, tmp_path):
 
 
 def test_sync_big_dv_uses_shared_dv_file(spark, tmp_path):
-    """dv_inline_max=0 forces every synced DV through the shared
-    per-commit DV file (storageType 'u'); two files DV-deleted in one
-    commit share the file at distinct offsets, and the foreign reader
-    applies both."""
+    """Synced DV descriptors are copied verbatim: two files DV-deleted
+    in one commit share the commit's DV file (storageType 'u') at
+    distinct offsets, the file is linked into the mirror, and the
+    foreign reader applies both."""
     from data_lakehouse_project_spark.operators.delta_export import (
         sync_delta_export,
     )
@@ -359,9 +359,9 @@ def test_sync_big_dv_uses_shared_dv_file(spark, tmp_path):
     t = TxnTable(src)
     # two files so one DV delete touches both
     t.write(_batch(spark, 0, 4).repartition(2), mode="overwrite")
-    sync_delta_export(spark, src, out, dv_inline_max=0)
+    sync_delta_export(spark, src, out)
     t.delete_where(spark, "id IN (0, 3)", dv=True)
-    info = sync_delta_export(spark, src, out, dv_inline_max=0)
+    info = sync_delta_export(spark, src, out)
     assert info["synced_commits"] == 1
 
     got = read_delta_table(spark, out)

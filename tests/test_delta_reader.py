@@ -778,9 +778,9 @@ def _z85(blob: bytes) -> str:
 
 
 def test_reads_txnlog_written_table(spark, tmp_path):
-    """A table written by the engine's own Delta-shaped writer is also
-    consumable through the foreign-log path, and DV-bearing tables are
-    refused exactly as the protocol demands."""
+    """A table written by the engine's own Delta writer is also
+    consumable through the foreign-log path — deletion vectors
+    included, since the engine writes spec DVs."""
     from data_lakehouse_project_spark.operators.txnlog import TxnTable
 
     path = str(tmp_path / "own_table")
@@ -802,17 +802,81 @@ def test_reads_txnlog_written_table(spark, tmp_path):
     assert sorted(ext.collect()) == sorted(own.collect())
 
     # delete via DV -> protocol upgrades to readerVersion 3 and the
-    # foreign-path reader must now REFUSE (our DV layout isn't Delta's)
+    # foreign-path reader applies the spec DVs exactly like TxnTable
     t.delete_where(spark, "id < 10", dv=True)
-    with pytest.raises(UnsupportedDeltaFeature):
-        read_delta_table(spark, path)
+    assert read_delta_snapshot(path).protocol["minReaderVersion"] == 3
+    ext = read_delta_table(spark, path)
+    assert sorted(ext.collect()) == sorted(t.read(spark).collect())
+    assert ext.count() == 110
+
+
+def test_txnlog_dv_tables_round_trip_through_spec_reader(spark, tmp_path):
+    """Every DV shape the engine writes reads back through the spec
+    reader (``read_delta_table``) with exactly ``TxnTable.read``'s rows:
+    DV deletes on a plain and a hive-partitioned table, a second DV
+    delete on the same file, a shallow clone of a DV table (and a DV
+    delete on its inherited files), the table after
+    ``optimize(purge_dv=True)``, and the foreign change feed over a DV
+    commit."""
+    from data_lakehouse_project_spark.operators.txnlog import TxnTable
+    from data_lakehouse_project_spark.sources import read_delta_changes
+
+    def same(t):
+        want = sorted(t.read(spark).collect())
+        assert sorted(read_delta_table(spark, t.path).collect()) == want
+        return want
+
+    df = spark.range(0, 60).selectExpr(
+        "id", "cast(id % 3 as string) AS grp", "id * 0.5 AS v"
+    )
+    plain = TxnTable(str(tmp_path / "plain"))
+    plain.write(df.coalesce(2), mode="overwrite")
+    v_dv = plain.delete_where(spark, "id % 5 = 0", dv=True)
+    assert len(same(plain)) == 48
+    # second DV delete on files that already carry one
+    plain.delete_where(spark, "id < 20", dv=True)
+    assert len(same(plain)) == 32
+    assert any(
+        f["foreign_dv"]["cardinality"] > 6 for f in plain.snapshot().files
+    )
+
+    part = TxnTable(str(tmp_path / "part"))
+    part.write(df, mode="overwrite", partition_by=["grp"])
+    part.delete_where(spark, "id % 4 = 1", dv=True)
+    assert len(same(part)) == 45
+
+    clone = plain.clone_to(str(tmp_path / "clone"))
+    assert same(clone) == same(plain)
+    clone.delete_where(spark, "id > 50", dv=True)
+    assert len(same(clone)) == 32 - 8
+
+    plain.optimize(spark, target_size_bytes=1, purge_dv=True)
+    assert not any(f.get("foreign_dv") for f in plain.snapshot().files)
+    assert len(same(plain)) == 32
+
+    def changes(feed):
+        return sorted(
+            (r.id, r._change_type, r._commit_version) for r in feed.collect()
+        )
+
+    feed = changes(
+        read_delta_changes(
+            spark, plain.path, starting_version=v_dv, ending_version=v_dv
+        )
+    )
+    assert feed == changes(
+        plain.read_changes(
+            spark, starting_version=v_dv, ending_version=v_dv
+        )
+    )
+    assert feed == [(i, "delete", v_dv) for i in range(0, 60, 5)]
 
 
 def test_read_delta_wrapper_routes_by_writer(spark, tmp_path, foreign_table):
     """sources.read_delta sends engine-written tables (stamped with the
-    lakehouse partition-spec conf key) through the full-featured
-    internal replayer — hidden partitions, DVs — and everything else
-    through the protocol-gated foreign reader."""
+    lakehouse partition-spec conf key) through ``TxnTable.read`` —
+    hidden-partition and bloom pruning — and everything else through
+    the protocol-gated foreign reader."""
     from data_lakehouse_project_spark.operators.txnlog import TxnTable
     from data_lakehouse_project_spark.sources import read_delta
 
@@ -822,8 +886,7 @@ def test_read_delta_wrapper_routes_by_writer(spark, tmp_path, foreign_table):
     assert {r.id for r in df.collect()} == {4, 5, 6, 7, 8, 9}
     assert {r.p for r in df.collect()} == {"x", "y"}
 
-    # internal table with a DV delete: the wrapper must still read it
-    # (the foreign path would refuse the DV protocol)
+    # internal table with a DV delete: routed to TxnTable.read
     path = str(tmp_path / "own_dv")
     t = TxnTable(path)
     t.write(

@@ -30,7 +30,6 @@ from data_lakehouse_project_spark.operators.sinks import write_table
 from data_lakehouse_project_spark.operators.txnlog import (
     CDC_DIR,
     CHECKPOINT_INTERVAL,
-    DV_DIR,
     TxnTable,
 )
 from data_lakehouse_project_spark.session import PARQUET_CODEC
@@ -106,7 +105,11 @@ def test_txn_table_data_cdc_dv_and_checkpoint_files(spark, tmp_path):
 
     _assert_zstd(t.path, lambda n: n.startswith("part-"))  # data files
     _assert_zstd(os.path.join(t.path, CDC_DIR))
-    _assert_zstd(os.path.join(t.path, DV_DIR))
+    # deletion vectors are spec roaring-bitmap files, not parquet
+    assert any(
+        n.startswith("deletion_vector_") and n.endswith(".bin")
+        for n in os.listdir(t.path)
+    )
     _assert_zstd(
         os.path.join(t.path, "_delta_log"),
         lambda n: n.endswith(".checkpoint.parquet"),

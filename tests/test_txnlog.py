@@ -235,12 +235,24 @@ def test_log_is_json_and_stats_present(spark, tmp_path):
         assert "modificationTime" in a and "partitionValues" in a
 
 
+def _checkpoints(path):
+    """Versions of the spec parquet checkpoints in the table's log."""
+    log = os.path.join(path, "_delta_log")
+    return sorted(
+        int(n.split(".")[0])
+        for n in os.listdir(log)
+        if n.endswith(".checkpoint.parquet")
+    )
+
+
+def _checkpoint_file(path, version):
+    return os.path.join(path, "_delta_log", f"{version:020d}.checkpoint.parquet")
+
+
 def test_checkpoint_compaction_bounds_replay(spark, tmp_path):
     """Every CHECKPOINT_INTERVAL-th commit writes a checkpoint; replay
     from it must agree exactly with linear replay, and time travel on
     both sides of the checkpoint keeps working."""
-    from data_lakehouse_project_spark.operators import txnlog as tl
-
     path = str(tmp_path / "tbl")
     t = TxnTable(path)
     t.write(_df(spark, 0, 10), mode="overwrite")  # v0
@@ -248,12 +260,12 @@ def test_checkpoint_compaction_bounds_replay(spark, tmp_path):
         t.write(_df(spark, 100 * i, 100 * i + 5), mode="append")
     assert t.latest_version() == 12
     # checkpoint landed at v10
-    assert tl._list_checkpoints(path) == [10]
+    assert _checkpoints(path) == [10]
 
     # checkpointed replay ≡ linear replay: delete the checkpoint and
     # compare the full snapshot file sets
     snap_fast = t.snapshot()
-    os.remove(tl._checkpoint_file(path, 10))
+    os.remove(_checkpoint_file(path, 10))
     snap_linear = t.snapshot()
     assert {f["path"] for f in snap_fast.files} == {
         f["path"] for f in snap_linear.files
@@ -263,7 +275,7 @@ def test_checkpoint_compaction_bounds_replay(spark, tmp_path):
     # restore a checkpoint by committing past the next interval
     for i in range(13, 21):
         t.write(_df(spark, 1000 * i, 1000 * i + 2), mode="append")
-    assert tl._list_checkpoints(path) == [20]
+    assert _checkpoints(path) == [20]
     # time travel BEFORE the checkpoint (linear replay region)
     assert t.read(spark, version=3).count() == 10 + 3 * 5
     # at and after it (checkpoint-started replay)
@@ -275,15 +287,13 @@ def test_checkpoint_corruption_is_nonfatal(spark, tmp_path):
     """The linear log stays the source of truth: a corrupt checkpoint
     can be deleted and every read still works (checkpoints only
     accelerate replay)."""
-    from data_lakehouse_project_spark.operators import txnlog as tl
-
     path = str(tmp_path / "tbl")
     t = TxnTable(path)
     t.write(_df(spark, 0, 10), mode="overwrite")
     for i in range(1, 11):
         t.write(_df(spark, 100 * i, 100 * i + 1), mode="append")
-    (cp,) = tl._list_checkpoints(path)
-    os.remove(tl._checkpoint_file(path, cp))
+    (cp,) = _checkpoints(path)
+    os.remove(_checkpoint_file(path, cp))
     assert t.read(spark).count() == 20
     assert t.read(spark, version=0).count() == 10
 

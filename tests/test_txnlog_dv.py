@@ -84,7 +84,7 @@ def test_dv_delete_rewrites_no_data_file(spark, tmp_path):
     info = t.history()[-1]
     assert info["mode"] == "dv" and info["rows_deleted"] == 20
     assert all(
-        f["dv"]["deleted_rows"] == 10 for f in t.snapshot().files
+        f["foreign_dv"]["cardinality"] == 10 for f in t.snapshot().files
     )
 
 
@@ -97,7 +97,7 @@ def test_dv_second_delete_unions_positions(spark, tmp_path):
     assert got == list(range(5, 45))
     assert t.snapshot().num_rows == 40
     [f] = t.snapshot().files
-    assert f["dv"]["deleted_rows"] == 10
+    assert f["foreign_dv"]["cardinality"] == 10
 
 
 def test_dv_then_cow_and_merge_preserve_dv_preimages(spark, tmp_path):
@@ -123,10 +123,10 @@ def test_optimize_materializes_deletion_vectors(spark, tmp_path):
     t = TxnTable(str(tmp_path / "tbl"))
     t.write(_df(spark, 0, 100).repartition(4), mode="overwrite")
     t.delete_where(spark, "id < 10", dv=True)
-    assert any(f.get("dv") for f in t.snapshot().files)
+    assert any(f.get("foreign_dv") for f in t.snapshot().files)
 
     t.optimize(spark, target_size_bytes=1 << 30)  # compact all → 1 file
-    assert not any(f.get("dv") for f in t.snapshot().files)
+    assert not any(f.get("foreign_dv") for f in t.snapshot().files)
     assert sorted(r.id for r in t.read(spark).collect()) == list(
         range(10, 100)
     )
@@ -143,13 +143,21 @@ def test_vacuum_reaps_unreferenced_dv_dirs(spark, tmp_path):
     t.write(_df(spark, 0, 50).coalesce(1), mode="overwrite")  # v0
     t.delete_where(spark, "id < 5", dv=True)  # v1 → dv A
     t.delete_where(spark, "id < 10", dv=True)  # v2 → dv B (supersedes)
-    dv_root = os.path.join(path, "_dv")
-    assert len(os.listdir(dv_root)) == 2
 
+    def dv_files():
+        return sorted(
+            n for n in os.listdir(path)
+            if n.startswith("deletion_vector_") and n.endswith(".bin")
+        )
+
+    assert len(dv_files()) == 2
+    before = dv_files()
     deleted = t.vacuum(keep_versions=1)
     # dv A unreferenced by the only retained snapshot → reaped
-    assert len(os.listdir(dv_root)) == 1
-    assert any(rel.startswith("_dv") for rel in deleted)
+    assert len(dv_files()) == 1
+    assert [n for n in deleted if n.endswith(".bin")] == sorted(
+        set(before) - set(dv_files())
+    )
     assert sorted(r.id for r in t.read(spark).collect()) == list(
         range(10, 50)
     )
@@ -243,7 +251,7 @@ def test_restore_undoes_a_deletion_vector(spark, tmp_path):
     assert t.read(spark).count() == 25
     t.restore(0)
     assert t.read(spark).count() == 30
-    assert not any(f.get("dv") for f in t.snapshot().files)
+    assert not any(f.get("foreign_dv") for f in t.snapshot().files)
 
 
 def test_restore_to_identical_state_is_noop(spark, tmp_path):
@@ -416,11 +424,11 @@ def test_optimize_purge_dv_reorg(spark, tmp_path):
 
     # plain optimize: single file at target layout → no-op, DV kept
     v = t.optimize(spark, target_size_bytes=1)
-    assert any(f.get("dv") for f in t.snapshot().files)
+    assert any(f.get("foreign_dv") for f in t.snapshot().files)
 
     v2 = t.optimize(spark, target_size_bytes=1, purge_dv=True)
     assert v2 > v
-    assert not any(f.get("dv") for f in t.snapshot().files)
+    assert not any(f.get("foreign_dv") for f in t.snapshot().files)
     assert sorted(r.id for r in t.read(spark).collect()) == list(
         range(10, 100)
     )
@@ -587,7 +595,9 @@ def test_optimize_zorder_prunes_both_dimensions(spark, tmp_path):
 
 def test_corrupt_checkpoint_falls_back_to_linear_replay(spark, tmp_path):
     """A torn/corrupt checkpoint must never brick the table — replay
-    falls back to older checkpoints, then to the raw commit files."""
+    falls back to older checkpoints, then to the raw commit files. The
+    checkpoint was parsed (and memoized) before it was overwritten, so
+    this also proves the memo never serves a rewritten file."""
     import glob
     import os as _os
 
@@ -596,7 +606,10 @@ def test_corrupt_checkpoint_falls_back_to_linear_replay(spark, tmp_path):
     t.write(_df(spark, 0, 10), mode="overwrite")
     for i in range(12):  # crosses the 10-commit checkpoint boundary
         t.write(_df(spark, 100 + i, 101 + i), mode="append")
-    cps = glob.glob(_os.path.join(path, "_delta_log", "*.snapcache.json"))
+    assert t.read(spark).count() == 22  # replayed from the checkpoint
+    cps = glob.glob(
+        _os.path.join(path, "_delta_log", "*.checkpoint.parquet")
+    )
     assert cps
     for cp in cps:
         with open(cp, "w") as fh:
@@ -608,11 +621,24 @@ def test_corrupt_checkpoint_falls_back_to_linear_replay(spark, tmp_path):
     t2.write(_df(spark, 500, 505), mode="append")  # and still writable
     assert t2.read(spark).count() == 27
 
+    # the parsed checkpoint memo keys on file identity: the rewritten
+    # file is re-read (and refused), never served from the memo — so
+    # once commit 0 is gone the log has a gap and the replay refuses
+    import pytest
+
+    from data_lakehouse_project_spark.operators.delta_log import (
+        CorruptDeltaLog,
+    )
+
+    _os.remove(_os.path.join(path, "_delta_log", f"{0:020d}.json"))
+    with pytest.raises(CorruptDeltaLog, match="gap"):
+        t2.snapshot()
+
 
 def test_dv_on_hive_partitioned_table(spark, tmp_path):
-    """Deletion vectors key on file basenames — partition dirs in the
-    path don't confuse the anti-join, and partition-pruned DV deletes
-    leave other partitions' files untouched."""
+    """Partition dirs in the path don't confuse the DV anti-join, and
+    partition-pruned DV deletes leave other partitions' files
+    untouched."""
     t = TxnTable(str(tmp_path / "tbl"))
     df = _df(spark, 0, 100).withColumn(
         "part", (F.col("id") % 2).cast("string")
@@ -633,7 +659,7 @@ def test_dv_on_hive_partitioned_table(spark, tmp_path):
     # partition files of part=1 never even carry a DV
     for f in t.snapshot().files:
         if f["partition_values"].get("part") == "1":
-            assert "dv" not in f
+            assert "foreign_dv" not in f
 
 
 def test_null_count_pruning(spark, tmp_path):

@@ -11,10 +11,8 @@ from __future__ import annotations
 import multiprocessing as mp
 import os
 
-from data_lakehouse_project_spark.operators.txnlog import (
-    TxnTable,
-    _list_versions,
-)
+from data_lakehouse_project_spark.operators.delta_log import _commit_versions
+from data_lakehouse_project_spark.operators.txnlog import TxnTable
 
 N_PROCS = 4
 N_COMMITS = 25
@@ -65,7 +63,7 @@ def test_multiprocess_blind_appends_never_lose_a_commit(tmp_path):
         p.join(120)
         assert p.exitcode == 0
 
-    versions = _list_versions(path)
+    versions = _commit_versions(path)
     total = N_PROCS * N_COMMITS
     # contiguous version chain, one slot per commit, none lost
     assert versions == list(range(total + 1))
