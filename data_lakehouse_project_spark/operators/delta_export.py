@@ -50,13 +50,18 @@ import uuid as _uuid
 from pyspark.sql import SparkSession
 
 from ..session import PARQUET_CODEC
+from .concurrency import replace_atomic
 from .delta_log import (
     LOG_DIR,
     _VERSION_DIGITS,
     _checkpoint_action_types,
+    _commit_file,
     _serialize_add,
     _serialize_remove,
+    _txn_rows,
     _write_classic_checkpoint,
+    _write_last_checkpoint,
+    publish_commit,
 )
 from .dv import dv_file_path, resolve_dv_positions, z85_encode
 from .txnlog import _file_stats, _parse_partition_spec, TxnTable
@@ -236,25 +241,15 @@ def export_delta_snapshot(
         "configuration": configuration,
         "createdTime": ts,
     }
-    commit_info = {
-        "timestamp": ts,
-        "operation": "EXPORT",
-        "operationParameters": {
-            "sourceVersion": str(snap.version),
-            "dvMode": dv_mode,
-        },
-        "engineInfo": "data_lakehouse_project_spark delta export",
-    }
-    commit = os.path.join(
-        target_path, LOG_DIR, f"{0:0{_VERSION_DIGITS}d}.json"
+    publish_commit(
+        target_path,
+        0,
+        [{"protocol": protocol}, {"metaData": meta},
+         *({"add": a} for a in adds)],
+        "EXPORT",
+        {"sourceVersion": str(snap.version), "dvMode": dv_mode},
+        ts_ms=ts,
     )
-    with open(commit + ".tmp", "w") as fh:
-        fh.write(json.dumps({"commitInfo": commit_info}) + "\n")
-        fh.write(json.dumps({"protocol": protocol}) + "\n")
-        fh.write(json.dumps({"metaData": meta}) + "\n")
-        for a in adds:
-            fh.write(json.dumps({"add": a}) + "\n")
-    os.replace(commit + ".tmp", commit)
 
     if write_checkpoint == "v2":
         _write_v2_checkpoint(target_path, protocol, meta, adds)
@@ -326,11 +321,7 @@ def sync_delta_export(
     # action validation (an arbitrary foreign/internal log should get
     # the clear "unknown history" refusal, not an add-intake error)
     info = None
-    with open(
-        os.path.join(
-            tgt_log, f"{tgt_vs[-1]:0{_VERSION_DIGITS}d}.json"
-        )
-    ) as fh:
+    with open(_commit_file(target_path, tgt_vs[-1])) as fh:
         for line in fh:
             line = line.strip()
             if line:
@@ -435,10 +426,7 @@ def sync_delta_export(
             actions.append({"remove": _serialize_remove(r, ts)})
         # cdc actions: link the _change_data files so foreign CDF
         # readers replay the same change feed
-        with open(
-            os.path.join(source_path, "_delta_log",
-                         f"{s:0{_VERSION_DIGITS}d}.json")
-        ) as fh:
+        with open(_commit_file(source_path, s)) as fh:
             for line in fh:
                 line = line.strip()
                 if not line:
@@ -453,25 +441,19 @@ def sync_delta_export(
                         os.path.join(target_path, rel),
                     )
                     actions.append({"cdc": act["cdc"]})
-        commit_info = {
-            "timestamp": ts,
-            "operation": "SYNC",
-            "operationParameters": {
+        # nothing staged to roll back on a lost race: the linked files
+        # are the source's, and the winner may reference the same links
+        publish_commit(
+            target_path,
+            next_tgt,
+            actions,
+            "SYNC",
+            {
                 "sourceVersion": str(s),
-                "sourceOperation": str(
-                    (cinfo or {}).get("operation", "")
-                ),
+                "sourceOperation": str((cinfo or {}).get("operation", "")),
             },
-            "engineInfo": "data_lakehouse_project_spark delta export",
-        }
-        commit = os.path.join(
-            tgt_log, f"{next_tgt:0{_VERSION_DIGITS}d}.json"
+            ts_ms=ts,
         )
-        with open(commit + ".tmp", "w") as fh:
-            fh.write(json.dumps({"commitInfo": commit_info}) + "\n")
-            for act in actions:
-                fh.write(json.dumps(act) + "\n")
-        os.replace(commit + ".tmp", commit)
         next_tgt += 1
         synced += 1
     checkpointed = None
@@ -494,14 +476,14 @@ def sync_delta_export(
 def _replay_raw_state(
     table_path: str,
     version: int | None = None,
-    refuse_txn: bool = False,
-) -> tuple[int, dict[str, dict], dict, dict]:
+) -> tuple[int, dict[str, dict], dict, dict, dict[str, dict]]:
     """Raw-action replay of a spec-Delta JSON log up to ``version``
     (default latest): ``(version, {unquoted path: raw add}, protocol,
-    metaData)``, carrying every add VERBATIM.  File actions within ONE
-    commit are a set, not a sequence — a DV update carries
-    remove(path, oldDV) AND add(path, newDV) in the same commit (in
-    either order) and the add wins, so removes reconcile first."""
+    metaData, {appId: newest raw txn})``, carrying every add
+    VERBATIM.  File actions within ONE commit are a set, not a
+    sequence — a DV update carries remove(path, oldDV) AND add(path,
+    newDV) in the same commit (in either order) and the add wins, so
+    removes reconcile first."""
     from urllib.parse import unquote
 
     from .delta_reader import _commit_versions
@@ -516,14 +498,12 @@ def _replay_raw_state(
             "is not contiguous from 0 (already cleaned?)"
         )
     active: dict[str, dict] = {}
+    txns: dict[str, dict] = {}
     protocol = meta = None
     for v in replay:
-        fname = os.path.join(
-            table_path, LOG_DIR, f"{v:0{_VERSION_DIGITS}d}.json"
-        )
         v_adds: list[dict] = []
         v_removes: list[str] = []
-        with open(fname) as fh:
+        with open(_commit_file(table_path, v)) as fh:
             for line in fh:
                 line = line.strip()
                 if not line:
@@ -537,12 +517,8 @@ def _replay_raw_state(
                     meta = act["metaData"]
                 elif "protocol" in act:
                     protocol = act["protocol"]
-                elif "txn" in act and refuse_txn:
-                    raise DeltaExportError(
-                        "log carries setTransaction actions; omitting "
-                        "them from a checkpoint would silently break "
-                        "idempotent-writer dedup — refusing"
-                    )
+                elif "txn" in act:
+                    txns[act["txn"]["appId"]] = act["txn"]
         for p in v_removes:
             active.pop(p, None)
         for a in v_adds:
@@ -551,7 +527,7 @@ def _replay_raw_state(
         raise DeltaExportError(
             "replay found no protocol/metaData — corrupt log"
         )
-    return version, active, protocol, meta
+    return version, active, protocol, meta, txns
 
 
 def restore_delta(
@@ -576,8 +552,8 @@ def restore_delta(
     from urllib.parse import unquote
 
     table_path = os.path.abspath(table_path)
-    cur_v, cur, protocol, cur_meta = _replay_raw_state(table_path)
-    tgt_v, tgt, _, tgt_meta = _replay_raw_state(table_path, version)
+    cur_v, cur, protocol, cur_meta, _ = _replay_raw_state(table_path)
+    tgt_v, tgt, _, tgt_meta, _ = _replay_raw_state(table_path, version)
     # Same writer gating as DML (_dml_prepare): RESTORE is a
     # data-changing commit, so unsupported writerFeatures / invariant
     # columns must refuse rather than break other engines' guarantees.
@@ -678,17 +654,7 @@ def restore_delta(
             [phys_of[c] for c in part_cols],
             field_ids=(mapping == "id"),
         )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(version)},
-                "engineInfo":
-                    "data_lakehouse_project_spark delta writer",
-            }
-        }
-    ]
+    actions: list[dict] = []
     if tgt_meta != cur_meta:
         actions.append({"metaData": tgt_meta})
     actions.extend(cdc_actions)
@@ -706,25 +672,15 @@ def restore_delta(
         {"add": dict(a, dataChange=True, modificationTime=ts)}
         for a in to_add
     )
-    commit = os.path.join(
-        table_path, LOG_DIR, f"{cur_v + 1:0{_VERSION_DIGITS}d}.json"
+    publish_commit(
+        table_path,
+        cur_v + 1,
+        actions,
+        "RESTORE",
+        {"version": str(version)},
+        cdc_paths,
+        ts_ms=ts,
     )
-    try:
-        with open(commit, "x") as fh:  # exclusive: concurrency-safe
-            for act in actions:
-                fh.write(json.dumps(act) + "\n")
-    except FileExistsError:
-        for p in cdc_paths:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        from .concurrency import ConcurrentCommitError
-
-        raise ConcurrentCommitError(
-            f"concurrent write detected at version {cur_v + 1}; "
-            "retry the restore against the new snapshot"
-        ) from None
     return {
         "version": cur_v + 1,
         "restored_to": version,
@@ -749,16 +705,20 @@ def write_foreign_checkpoint(
     Raw actions are carried VERBATIM (URL-encoded paths, stats JSON,
     deletionVector descriptors, row-tracking baseRowId /
     defaultRowCommitVersion), so the checkpoint never re-interprets
-    file state.  Remove tombstones are omitted (this repo's
-    ``vacuum_delta`` retires files by reference + mtime, not
-    tombstones); ``txn`` app versions would be LOST by omission, so a
-    log carrying setTransaction actions is refused."""
+    file state.  The newest ``txn`` action per app id rides along, so
+    idempotent writers still dedup after log cleaning.  Remove
+    tombstones are omitted (this repo's ``vacuum_delta`` retires files
+    by reference + mtime, not tombstones)."""
     if kind not in ("classic", "v2"):
         raise ValueError(f"unknown checkpoint kind {kind!r}")
-    version, active, protocol, meta = _replay_raw_state(
-        table_path, version, refuse_txn=True
+    version, active, protocol, meta, txns = _replay_raw_state(
+        table_path, version
     )
     adds = list(active.values())
+    txn_versions = {app: int(t["version"]) for app, t in txns.items()}
+    txn_ts = max(
+        (int(t.get("lastUpdated") or 0) for t in txns.values()), default=0
+    )
     if kind == "v2":
         # spec: v2 checkpoints require the v2Checkpoint table feature.
         # A checkpoint must never ASSERT a protocol the log did not
@@ -772,10 +732,12 @@ def write_foreign_checkpoint(
                 "commit a protocol upgrade before writing v2 "
                 "checkpoints"
             )
-        _write_v2_checkpoint(table_path, protocol, meta, adds, version)
+        _write_v2_checkpoint(
+            table_path, protocol, meta, adds, version, txn_versions, txn_ts
+        )
     else:
         _write_classic_checkpoint(
-            table_path, protocol, meta, adds, version
+            table_path, protocol, meta, adds, version, txn_versions, txn_ts
         )
     return {"version": version, "files": len(adds), "kind": kind}
 
@@ -874,28 +836,18 @@ def convert_parquet_dir_to_delta(
         "configuration": {},
         "createdTime": ts,
     }
-    commit = os.path.join(path, LOG_DIR, f"{0:0{_VERSION_DIGITS}d}.json")
-    with open(commit + ".tmp", "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "commitInfo": {
-                        "timestamp": ts,
-                        "operation": "CONVERT",
-                        "operationParameters": {
-                            "numFiles": str(len(adds)),
-                            "partitionedBy": json.dumps(part_cols),
-                        },
-                    }
-                }
-            )
-            + "\n"
-        )
-        fh.write(json.dumps({"protocol": protocol}) + "\n")
-        fh.write(json.dumps({"metaData": meta}) + "\n")
-        for a in adds:
-            fh.write(json.dumps({"add": a}) + "\n")
-    os.replace(commit + ".tmp", commit)
+    publish_commit(
+        path,
+        0,
+        [{"protocol": protocol}, {"metaData": meta},
+         *({"add": a} for a in adds)],
+        "CONVERT",
+        {
+            "numFiles": str(len(adds)),
+            "partitionedBy": json.dumps(part_cols),
+        },
+        ts_ms=ts,
+    )
     return {"version": 0, "files": len(adds),
             "partition_columns": part_cols}
 
@@ -906,6 +858,8 @@ def _write_v2_checkpoint(
     meta: dict,
     adds: list[dict],
     version: int = 0,
+    txns: dict | None = None,
+    ts_ms: int = 0,
 ) -> None:
     """V2 spec checkpoint (the modern delta-spark default once
     ``v2Checkpoint`` is enabled): a UUID-named manifest
@@ -918,7 +872,7 @@ def _write_v2_checkpoint(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    protocol_t, meta_t, add_t = _checkpoint_action_types()
+    protocol_t, meta_t, add_t, txn_t = _checkpoint_action_types()
     log_dir = os.path.join(target_path, LOG_DIR)
     side_dir = os.path.join(log_dir, "_sidecars")
     os.makedirs(side_dir, exist_ok=True)
@@ -943,6 +897,7 @@ def _write_v2_checkpoint(
         {"checkpointMetadata": {"version": version}},
         {"protocol": protocol},
         {"metaData": meta},
+        *_txn_rows(txns, ts_ms),
         {
             "sidecar": {
                 "path": side_name,  # spec: relative to _sidecars/
@@ -958,6 +913,7 @@ def _write_v2_checkpoint(
                 ("checkpointMetadata", cm_t),
                 ("protocol", protocol_t),
                 ("metaData", meta_t),
+                ("txn", txn_t),
                 ("sidecar", sc_t),
             ]
         ),
@@ -965,8 +921,8 @@ def _write_v2_checkpoint(
     name = (
         f"{version:0{_VERSION_DIGITS}d}.checkpoint.{_uuid.uuid4()}.parquet"
     )
-    pq.write_table(
-        manifest, os.path.join(log_dir, name), compression=PARQUET_CODEC
+    replace_atomic(
+        os.path.join(log_dir, name),
+        lambda p: pq.write_table(manifest, p, compression=PARQUET_CODEC),
     )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
+    _write_last_checkpoint(target_path, version, len(rows))

@@ -1,6 +1,6 @@
-"""The Delta log core: one action codec, one snapshot replay, one
-classic-checkpoint writer and one deletion-vector (DV) encoding for
-every ``_delta_log`` this engine touches.
+"""The Delta log core: one action codec, one commit publish, one
+snapshot replay, one classic-checkpoint writer and one deletion-vector
+(DV) encoding for every ``_delta_log`` this engine touches.
 
 The engine's own tables (``operators/txnlog.py``), the reader for
 foreign logs (``operators/delta_reader.py``), the spec export/mirror
@@ -25,6 +25,10 @@ PROTOCOL.md live here once:
   to the JSON commits.  The parsed state of a classic checkpoint is
   memoized by file identity, so the ~50 snapshots an ingest episode
   takes parse each checkpoint once.
+* **Commits** — ``publish_commit`` builds the ``commitInfo`` line and
+  publishes version N through ``concurrency.publish_exclusive``; every
+  writer of every log here (``TxnTable``, the foreign DML writers,
+  export, sync, RESTORE, CONVERT) commits through it.
 * **Checkpoints** — ``_write_classic_checkpoint`` writes the spec's
   columnar ``V.checkpoint.parquet`` (protocol, metaData, txn, add with
   tags and DV descriptors) and the ``_last_checkpoint`` pointer.
@@ -41,14 +45,18 @@ import functools
 import json
 import os
 import uuid as _uuid
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
 
 from ..session import PARQUET_CODEC
+from .concurrency import publish_exclusive, replace_atomic
 from .dv import resolve_dv_positions, write_dv_file, z85_encode
 
 LOG_DIR = "_delta_log"
 _VERSION_DIGITS = 20
+# commitInfo.engineInfo of every commit this engine publishes
+ENGINE_INFO = "data_lakehouse_project_spark"
 
 # engine extensions ride in spec-sanctioned extension points: CHECK
 # constraints where Delta itself stores them, the (hidden-)partition
@@ -307,6 +315,49 @@ def _last_checkpoint_version(table_path: str) -> int | None:
 def _commit_file(table_path: str, version: int) -> str:
     return os.path.join(
         _log_dir(table_path), f"{version:0{_VERSION_DIGITS}d}.json"
+    )
+
+
+def publish_commit(
+    table_path: str,
+    version: int,
+    actions: list[dict],
+    operation: str,
+    params: dict | None = None,
+    staged: Iterable[str] = (),
+    *,
+    ts_ms: int,
+    extra: dict | None = None,
+) -> None:
+    """Publish commit ``version``: a ``commitInfo`` line (``ts_ms``,
+    ``operation``, ``operationParameters``, ``engineInfo``, then the
+    caller's ``extra`` keys) and one line per action, made visible all
+    at once and only if the slot is free
+    (``concurrency.publish_exclusive``).  A lost race removes the
+    ``staged`` files and raises ``ConcurrentCommitError``."""
+    info = {
+        "timestamp": ts_ms,
+        "operation": operation,
+        "operationParameters": params or {},
+        "engineInfo": ENGINE_INFO,
+        **(extra or {}),
+    }
+    publish_exclusive(
+        _commit_file(table_path, version),
+        "".join(
+            json.dumps(a) + "\n" for a in [{"commitInfo": info}, *actions]
+        ),
+        staged,
+    )
+
+
+def _write_last_checkpoint(table_path: str, version: int, size: int) -> None:
+    def _pointer(p: str) -> None:
+        with open(p, "w") as fh:
+            json.dump({"version": version, "size": size}, fh)
+
+    replace_atomic(
+        os.path.join(_log_dir(table_path), "_last_checkpoint"), _pointer
     )
 
 
@@ -748,17 +799,23 @@ def _checkpoint_action_types():
             ("defaultRowCommitVersion", pa.int64()),
         ]
     )
-    return protocol_t, meta_t, add_t
-
-
-def _publish(path: str, write) -> None:
-    """Write through a temp file in the same dir, then rename — a
-    reader never sees a half-written checkpoint or pointer."""
-    tmp = os.path.join(
-        os.path.dirname(path), f".tmp-{_uuid.uuid4().hex}"
+    txn_t = pa.struct(
+        [
+            ("appId", pa.string()),
+            ("version", pa.int64()),
+            ("lastUpdated", pa.int64()),
+        ]
     )
-    write(tmp)
-    os.replace(tmp, path)
+    return protocol_t, meta_t, add_t, txn_t
+
+
+def _txn_rows(txns: dict | None, ts_ms: int) -> list[dict]:
+    """One checkpoint ``txn`` row per app id (last updated at
+    ``ts_ms``): omitting one would break idempotent-writer dedup."""
+    return [
+        {"txn": {"appId": app, "version": v, "lastUpdated": ts_ms}}
+        for app, v in sorted((txns or {}).items())
+    ]
 
 
 def _write_classic_checkpoint(
@@ -780,19 +837,9 @@ def _write_classic_checkpoint(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    protocol_t, meta_t, add_t = _checkpoint_action_types()
-    txn_t = pa.struct(
-        [
-            ("appId", pa.string()),
-            ("version", pa.int64()),
-            ("lastUpdated", pa.int64()),
-        ]
-    )
+    protocol_t, meta_t, add_t, txn_t = _checkpoint_action_types()
     rows: list[dict] = [{"protocol": protocol}, {"metaData": meta}]
-    rows += [
-        {"txn": {"appId": app, "version": v, "lastUpdated": ts_ms}}
-        for app, v in sorted((txns or {}).items())
-    ]
+    rows += _txn_rows(txns, ts_ms)
     rows += [{"add": a} for a in adds]
     table = pa.Table.from_pylist(
         rows,
@@ -802,18 +849,13 @@ def _write_classic_checkpoint(
         ),
     )
     log = _log_dir(table_path)
-    _publish(
+    replace_atomic(
         os.path.join(log, f"{version:0{_VERSION_DIGITS}d}.checkpoint.parquet"),
         lambda p: pq.write_table(
             table, p, compression=PARQUET_CODEC, write_statistics=False
         ),
     )
-
-    def _pointer(p: str) -> None:
-        with open(p, "w") as fh:
-            json.dump({"version": version, "size": len(rows)}, fh)
-
-    _publish(os.path.join(log, "_last_checkpoint"), _pointer)
+    _write_last_checkpoint(table_path, version, len(rows))
 
 
 # -------------------------------------------------------- deletion vectors

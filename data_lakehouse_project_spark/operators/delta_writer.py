@@ -23,10 +23,12 @@ same refuse-don't-corrupt way the readers gate:
   ``partitionValues``.
 * Stats come from the written files' parquet footers — foreign
   readers file-skip the appended data immediately.
-* The commit file is created with ``open(..., 'x')``: a concurrent
-  writer racing to the same version fails cleanly instead of
-  clobbering (single-writer optimistic commit; no retry loop —
-  callers own the retry policy).
+* Every commit is published by ``delta_log.publish_commit`` (one
+  fsynced temp file hard-linked into the free version slot): a writer
+  killed mid-commit leaves no torn version, and a concurrent writer
+  racing to the same version gets ``ConcurrentCommitError`` with its
+  staged files removed instead of clobbering (no retry loop — callers
+  own the retry policy, ``concurrency.commit_with_retries``).
 """
 
 from __future__ import annotations
@@ -48,12 +50,11 @@ from .delta_reader import (
     _spark_path_key,
     read_delta_snapshot,
 )
-from .concurrency import ConcurrentCommitError
 from .delta_log import (
-    LOG_DIR,
-    _VERSION_DIGITS,
+    _commit_file,
     _dv_pair_actions,
     _serialize_add,
+    publish_commit,
 )
 from .txnlog import _file_stats
 
@@ -125,11 +126,8 @@ def _row_tracking_state(table_path: str, snap) -> tuple[bool, int]:
     from .delta_reader import _commit_versions
 
     for v in reversed(_commit_versions(table_path)):
-        fname = os.path.join(
-            table_path, LOG_DIR, f"{v:0{_VERSION_DIGITS}d}.json"
-        )
         try:
-            with open(fname) as fh:
+            with open(_commit_file(table_path, v)) as fh:
                 for line in fh:
                     line = line.strip()
                     if not line or '"domainMetadata"' not in line:
@@ -548,37 +546,15 @@ def append_to_delta(
     rt_actions: list[dict] = []
     if rt_enabled:
         rt_actions, _ = _row_tracking_actions(adds, hwm, version)
-    commit_info = {
-        "timestamp": ts,
-        "operation": "WRITE",
-        "operationParameters": {"mode": "Append", "partitionBy":
-                                json.dumps(part_cols)},
-        "engineInfo": "data_lakehouse_project_spark delta writer",
-    }
-    commit = os.path.join(
-        table_path, LOG_DIR, f"{version:0{_VERSION_DIGITS}d}.json"
+    publish_commit(
+        table_path,
+        version,
+        [*new_meta_action, *rt_actions, *({"add": a} for a in adds)],
+        "WRITE",
+        {"mode": "Append", "partitionBy": json.dumps(part_cols)},
+        _staged(table_path, adds),
+        ts_ms=ts,
     )
-    try:
-        # exclusive create: a concurrent writer racing to this version
-        # fails cleanly (optimistic commit, caller owns retries)
-        with open(commit, "x") as fh:
-            fh.write(json.dumps({"commitInfo": commit_info}) + "\n")
-            for act in (*new_meta_action, *rt_actions):
-                fh.write(json.dumps(act) + "\n")
-            for a in adds:
-                fh.write(json.dumps({"add": a}) + "\n")
-    except FileExistsError:
-        for a in adds:  # roll the orphaned data files back
-            try:
-                os.remove(
-                    os.path.join(table_path, _unq(a["path"]))
-                )
-            except OSError:
-                pass
-        raise ConcurrentCommitError(
-            f"concurrent write detected at version {version}; retry "
-            "the append against the new snapshot"
-        ) from None
     return {"version": version, "files": len(adds), "rows": n_rows}
 
 
@@ -654,22 +630,15 @@ def delete_from_delta(
         table_path, snap, by_path, _abs, ts
     )
     version = snap.version + 1
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo":
-                    "data_lakehouse_project_spark delta writer",
-            }
-        },
-        *_protocol_upgrade_actions(snap, ctx[4]),
-        *cdc_actions,
-        *dv_actions,
-    ]
-    _exclusive_commit(
-        table_path, version, actions, [dv_path, *cdc_paths], "delete"
+    publish_commit(
+        table_path,
+        version,
+        [*_protocol_upgrade_actions(snap, ctx[4]), *cdc_actions,
+         *dv_actions],
+        "DELETE",
+        {"predicate": predicate},
+        _staged(table_path, [], dv_path, *cdc_paths),
+        ts_ms=ts,
     )
     return {
         "version": version,
@@ -1001,30 +970,13 @@ def _protocol_upgrade_actions(snap, has_dv_feature: bool) -> list[dict]:
     ]
 
 
-def _exclusive_commit(
-    table_path: str,
-    version: int,
-    actions: list[dict],
-    rollback_paths: list[str],
-    op: str,
-) -> None:
-    commit = os.path.join(
-        table_path, LOG_DIR, f"{version:0{_VERSION_DIGITS}d}.json"
-    )
-    try:
-        with open(commit, "x") as fh:
-            for act in actions:
-                fh.write(json.dumps(act) + "\n")
-    except FileExistsError:
-        for p in rollback_paths:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        raise ConcurrentCommitError(
-            f"concurrent write detected at version {version}; retry "
-            f"the {op} against the new snapshot"
-        ) from None
+def _staged(table_path: str, adds: list[dict], *paths: str | None):
+    """Files a commit created before publishing — the data files of
+    its raw ``adds`` plus DV / cdc files — removed if the commit loses
+    its version race."""
+    return [p for p in paths if p] + [
+        os.path.join(table_path, _unq(a["path"])) for a in adds
+    ]
 
 
 def update_from_delta(
@@ -1158,15 +1110,6 @@ def update_from_delta(
         # override them on read, so the matched rows' ids are stable
         rt_actions, _ = _row_tracking_actions(adds, rt_hwm, version)
     actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo":
-                    "data_lakehouse_project_spark delta writer",
-            }
-        },
         *_protocol_upgrade_actions(snap, ctx[4]),
         *rt_meta_action,
         *rt_actions,
@@ -1174,18 +1117,15 @@ def update_from_delta(
         *dv_actions,
         *({"add": a} for a in adds),
     ]
-    try:
-        _exclusive_commit(
-            table_path, version, actions, [dv_path, *cdc_paths],
-            "update",
-        )
-    except ValueError:
-        for a in adds:  # roll the staged rewritten files back too
-            try:
-                os.remove(os.path.join(table_path, _unq(a["path"])))
-            except OSError:
-                pass
-        raise
+    publish_commit(
+        table_path,
+        version,
+        actions,
+        "UPDATE",
+        {"predicate": predicate},
+        _staged(table_path, adds, dv_path, *cdc_paths),
+        ts_ms=ts,
+    )
     return {
         "version": version,
         "rows_updated": n_rows,
@@ -1434,31 +1374,20 @@ def optimize_delta(
         # override them on read, preserving the original ids
         rt_actions, _ = _row_tracking_actions(all_adds, rt_hwm, version)
     actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetSize": str(target_size_bytes)
-                },
-                "engineInfo":
-                    "data_lakehouse_project_spark delta writer",
-            }
-        },
         *rt_meta_action,
         *rt_actions,
         *({"remove": r} for r in all_removes),
         *({"add": a} for a in all_adds),
     ]
-    try:
-        _exclusive_commit(table_path, version, actions, [], "optimize")
-    except ValueError:
-        for a in all_adds:
-            try:
-                os.remove(os.path.join(table_path, _unq(a["path"])))
-            except OSError:
-                pass
-        raise
+    publish_commit(
+        table_path,
+        version,
+        actions,
+        "OPTIMIZE",
+        {"targetSize": str(target_size_bytes)},
+        _staged(table_path, all_adds),
+        ts_ms=ts,
+    )
     return {
         "version": version,
         "files_removed": len(all_removes),
@@ -1721,15 +1650,6 @@ def merge_into_delta(
     if rt_enabled and adds:
         rt_actions, _ = _row_tracking_actions(adds, rt_hwm, version)
     actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {"predicate": on},
-                "engineInfo":
-                    "data_lakehouse_project_spark delta writer",
-            }
-        },
         *(
             _protocol_upgrade_actions(snap, ctx[4]) if by_path else []
         ),
@@ -1739,21 +1659,15 @@ def merge_into_delta(
         *dv_actions,
         *({"add": a} for a in adds),
     ]
-    try:
-        _exclusive_commit(
-            table_path,
-            version,
-            actions,
-            ([dv_path] if dv_path else []) + cdc_paths,
-            "merge",
-        )
-    except ValueError:
-        for a in adds:
-            try:
-                os.remove(os.path.join(table_path, _unq(a["path"])))
-            except OSError:
-                pass
-        raise
+    publish_commit(
+        table_path,
+        version,
+        actions,
+        "MERGE",
+        {"predicate": on},
+        _staged(table_path, adds, dv_path, *cdc_paths),
+        ts_ms=ts,
+    )
     return {
         "version": version,
         "rows_updated": rows_updated,

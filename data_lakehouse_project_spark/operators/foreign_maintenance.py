@@ -27,7 +27,6 @@ caller can audit before destroying history.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -37,6 +36,7 @@ from .iceberg_reader import (
     _latest_metadata_file,
     _snapshot_order,
     load_iceberg_metadata,
+    publish_metadata,
 )
 
 DEFAULT_RETENTION_MS = 7 * 24 * 3600 * 1000  # delta's 168h default
@@ -123,8 +123,6 @@ def rollback_iceberg(table_path: str, snapshot_id: int) -> dict:
     ancestor snapshot with a NEW metadata version (history preserved —
     the newer snapshots stay until expired).  The snapshot-log gains a
     fresh entry for the rolled-back head, exactly Iceberg's shape."""
-    import time
-
     table_path = os.path.abspath(table_path)
     md_file = _latest_metadata_file(table_path)
     md = load_iceberg_metadata(table_path)
@@ -149,13 +147,8 @@ def rollback_iceberg(table_path: str, snapshot_id: int) -> dict:
         }
     ]
     new_md["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_path, "metadata")
     cur_v = int(os.path.basename(md_file)[1:].split(".")[0])
-    new_path = os.path.join(meta_dir, f"v{cur_v + 1}.metadata.json")
-    with open(new_path, "x") as fh:  # exclusive: concurrency-safe
-        json.dump(new_md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
+    new_path = publish_metadata(table_path, cur_v + 1, new_md)
     return {
         "current_snapshot_id": snapshot_id,
         "rolled_back_from": cur,
@@ -269,28 +262,14 @@ def expire_iceberg_snapshots(
         for e in md.get("snapshot-log", [])
         if e.get("snapshot-id") in retained
     ]
-    meta_dir = os.path.join(table_path, "metadata")
-    cur_v = int(
-        os.path.basename(md_file)[1:].split(".")[0]
-    )
-    new_path = os.path.join(meta_dir, f"v{cur_v + 1}.metadata.json")
+    report["new_metadata"] = None
     if not dry_run:
-        # Exclusive create (like every other commit path): a
-        # concurrently committed v{N+1}.metadata.json must NOT be
-        # silently overwritten — that would orphan the other writer's
-        # snapshot before any file deletion even starts.
-        try:
-            with open(new_path, "x") as fh:
-                json.dump(new_md, fh)
-        except FileExistsError:
-            raise RuntimeError(
-                f"concurrent commit detected at {new_path}; "
-                "re-read the table and retry expire_iceberg_snapshots"
-            ) from None
-        with open(
-            os.path.join(meta_dir, "version-hint.text"), "w"
-        ) as fh:
-            fh.write(str(cur_v + 1))
+        # a lost race raises ConcurrentCommitError before any file is
+        # deleted: the winner's snapshot may still reference them
+        cur_v = int(os.path.basename(md_file)[1:].split(".")[0])
+        report["new_metadata"] = publish_metadata(
+            table_path, cur_v + 1, new_md
+        )
         for p in sorted(drop):
             try:
                 os.remove(p)
@@ -299,5 +278,4 @@ def expire_iceberg_snapshots(
     report["deleted"] = sorted(
         os.path.relpath(p, table_path) for p in drop
     )
-    report["new_metadata"] = new_path if not dry_run else None
     return report

@@ -43,6 +43,9 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from data_lakehouse_project_spark.operators.iceberg_reader import (
+    publish_metadata,
+)
 from data_lakehouse_project_spark.operators.txnlog import (
     TxnTable,
     _parse_partition_spec,
@@ -792,11 +795,4 @@ def export_iceberg_metadata(
             "main": {"snapshot-id": snapshot_id, "type": "branch"}
         },
     }
-    out = os.path.join(meta_dir, f"v{mv}.metadata.json")
-    tmp = out + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(metadata, fh, indent=2)
-    os.replace(tmp, out)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(mv))
-    return out
+    return publish_metadata(table.path, mv, metadata)

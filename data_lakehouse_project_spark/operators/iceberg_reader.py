@@ -53,6 +53,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .concurrency import publish_exclusive, replace_atomic
+
 
 class UnsupportedIcebergFeature(ValueError):
     """The table requires a reader capability this engine lacks."""
@@ -137,6 +139,27 @@ def avro_records(spark: SparkSession, path: str):
 
 
 # ---------------------------------------------------------------- metadata
+
+
+def publish_metadata(
+    table_path: str, version: int, metadata: dict, staged=()
+) -> str:
+    """Commit ``metadata`` as ``metadata/v{version}.metadata.json``
+    through ``concurrency.publish_exclusive`` (whole file or nothing;
+    a lost race removes ``staged`` and raises
+    ``ConcurrentCommitError``), then point ``version-hint.text`` at it
+    by atomic replace.  Every Iceberg commit in this package ends
+    here; returns the new metadata path."""
+    meta_dir = os.path.join(table_path, "metadata")
+    path = os.path.join(meta_dir, f"v{version}.metadata.json")
+    publish_exclusive(path, json.dumps(metadata), staged)
+
+    def _hint(p: str) -> None:
+        with open(p, "w") as fh:
+            fh.write(str(version))
+
+    replace_atomic(os.path.join(meta_dir, "version-hint.text"), _hint)
+    return path
 
 
 def _latest_metadata_file(table_path: str) -> str:

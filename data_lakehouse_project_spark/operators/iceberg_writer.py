@@ -25,9 +25,13 @@ Spec obligations, gated refuse-don't-corrupt:
   at ``last-sequence-number + 1``; existing position/equality delete
   manifests carry forward and, per the sequence rule, do NOT apply to
   the strictly-newer appended rows.
-* The new ``v{N+1}.metadata.json`` is created with ``open(..., 'x')``
-  — a concurrent committer racing to the same metadata version fails
-  cleanly (callers own retries).
+* The new ``v{N+1}.metadata.json`` is published by
+  ``iceberg_reader.publish_metadata`` (fsynced temp file hard-linked
+  into the free slot, then an atomic ``version-hint.text`` replace):
+  a writer killed mid-commit leaves no torn metadata, and a concurrent
+  committer racing to the same metadata version gets
+  ``ConcurrentCommitError`` with its staged files removed (callers own
+  retries, ``concurrency.commit_with_retries``).
 """
 
 from __future__ import annotations
@@ -37,8 +41,6 @@ import os
 import shutil
 import time
 import uuid as _uuid
-
-from .concurrency import ConcurrentCommitError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +59,7 @@ from .iceberg_reader import (
     _spark_schema,
     avro_records,
     load_iceberg_metadata,
+    publish_metadata,
 )
 from .txnlog import _file_stats
 
@@ -707,7 +710,7 @@ def _commit_snapshot(
         wl.append_dict(r)
     wl.close()
 
-    # ---- new metadata version (exclusive create = commit point) ----
+    # ---- new metadata version (the commit point) ----
     new_md = dict(md)
     snap_entry = {
         "snapshot-id": snapshot_id,
@@ -748,23 +751,9 @@ def _commit_snapshot(
     if next_row_id is not None:
         new_md["next-row-id"] = int(next_row_id)
     cur_v = int(os.path.basename(md_file)[1:].split(".")[0])
-    new_path = os.path.join(meta_dir, f"v{cur_v + 1}.metadata.json")
-    try:
-        with open(new_path, "x") as fh:
-            json.dump(new_md, fh)
-    except FileExistsError:
-        for p in [*rollback_paths, list_path]:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        raise ConcurrentCommitError(
-            f"concurrent commit detected at metadata v{cur_v + 1}; "
-            "retry against the new snapshot"
-        ) from None
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return new_path
+    return publish_metadata(
+        table_path, cur_v + 1, new_md, [*rollback_paths, list_path]
+    )
 
 
 def _iceberg_keyed_scan(spark: SparkSession, table_path: str, md: dict):
@@ -2015,16 +2004,7 @@ def upgrade_iceberg_to_v3(
         md2["next-row-id"] = 0
         md2["last-updated-ms"] = ts
         cur_v = int(os.path.basename(md_file)[1:].split(".")[0])
-        meta_dir = os.path.join(table_path, "metadata")
-        new_path = os.path.join(
-            meta_dir, f"v{cur_v + 1}.metadata.json"
-        )
-        with open(new_path, "x") as fh:
-            json.dump(md2, fh)
-        with open(
-            os.path.join(meta_dir, "version-hint.text"), "w"
-        ) as fh:
-            fh.write(str(cur_v + 1))
+        new_path = publish_metadata(table_path, cur_v + 1, md2)
         return {"snapshot_id": None, "rows_assigned": 0,
                 "metadata": new_path}
 

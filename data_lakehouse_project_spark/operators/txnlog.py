@@ -10,10 +10,13 @@ stats) re-expressed small:
 
 - **Atomic commits** — data files land under the table dir first (they
   are invisible until referenced); the commit record is then published
-  with an atomic create-if-absent (``os.link``), so a reader replaying
-  the log sees either all of a commit or none of it. Versions are the
-  contiguous integers ``0..latest``, one JSON file per version in
-  ``_txn_log/``.
+  by ``concurrency.publish_exclusive``, the one publish every Delta and
+  Iceberg writer here shares: the whole record goes to an fsynced temp
+  file that is hard-linked into the version slot only if the slot is
+  free, so a reader replaying the log sees either all of a commit or
+  none of it, even when the writer is killed mid-commit. Versions are
+  the contiguous integers ``0..latest``, one JSON file per version in
+  ``_delta_log/``.
 - **Time travel** — ``read(version=...)`` / ``read(as_of_ms=...)``
   replays the log to the requested point; overwritten files stay on disk
   until ``vacuum`` so old snapshots remain readable.
@@ -95,9 +98,11 @@ from .delta_log import (
     _spark_path_key,
     _write_classic_checkpoint,
     drop_deleted_rows,
+    publish_commit,
     read_delta_snapshot,
     sniff_commit_meta_protocol,
 )
+from .concurrency import ConcurrentCommitError
 from .dv import dv_file_path
 
 CDC_DIR = "_change_data"
@@ -2045,9 +2050,9 @@ class TxnTable:
         txn: tuple[str, int] | None = None,
         cdc_actions: list[dict] | None = None,
     ) -> int:
-        """Publish: serialize actions to a temp file, then atomically
-        link it to the next version slot. Losing a race means someone
-        else owns that version — blind appends retry at the new tip;
+        """Publish the actions as the next version through
+        ``delta_log.publish_commit``. Losing a race means someone else
+        owns that version — blind appends retry at the new tip;
         read-dependent operations raise ConcurrentWriteConflict."""
         os.makedirs(_log_dir(self.path), exist_ok=True)
         if constraints is None:  # carry the table's current constraints
@@ -2089,70 +2094,48 @@ class TxnTable:
                 if (dv_in_commit or dv_active)
                 else dict(_PROTOCOL_BASE)
             )
-            lines = [
-                json.dumps(
-                    {
-                        "commitInfo": {
-                            "version": attempt_version,
-                            "timestamp": ts_ms,
-                            "operation": operation,
-                            "readVersion": read_version,
-                            "engineInfo": "delta-lite/pyspark",
-                            **(info_extra or {}),
-                        }
-                    }
-                ),
-                json.dumps({"protocol": protocol}),
-                json.dumps(
-                    {
-                        "metaData": _serialize_meta(
-                            schema_json,
-                            partition_by,
-                            constraints,
-                            table_id or fresh_table_id,
-                            ts_ms,
-                            bucket_hash=bucket_hash,
-                        )
-                    }
-                ),
+            actions = [
+                {"protocol": protocol},
+                {
+                    "metaData": _serialize_meta(
+                        schema_json,
+                        partition_by,
+                        constraints,
+                        table_id or fresh_table_id,
+                        ts_ms,
+                        bucket_hash=bucket_hash,
+                    )
+                },
             ]
             if txn is not None:
-                lines.append(
-                    json.dumps(
-                        {
-                            "txn": {
-                                "appId": txn[0],
-                                "version": txn[1],
-                                "lastUpdated": ts_ms,
-                            }
+                actions.append(
+                    {
+                        "txn": {
+                            "appId": txn[0],
+                            "version": txn[1],
+                            "lastUpdated": ts_ms,
                         }
-                    )
+                    }
                 )
-            lines += [
-                json.dumps({"add": _serialize_add(a, ts_ms)}) for a in adds
+            actions += [{"add": _serialize_add(a, ts_ms)} for a in adds]
+            actions += [
+                {"remove": _serialize_remove(r, ts_ms)} for r in removes
             ]
-            lines += [
-                json.dumps({"remove": _serialize_remove(r, ts_ms)})
-                for r in removes
-            ]
-            lines += [
-                json.dumps({"cdc": c}) for c in (cdc_actions or [])
-            ]
-            tmp = os.path.join(
-                _log_dir(self.path), f".tmp-{uuid.uuid4().hex}.json"
-            )
-            with open(tmp, "w") as fh:
-                fh.write("\n".join(lines) + "\n")
-                fh.flush()
-                os.fsync(fh.fileno())
-            target = _commit_file(self.path, attempt_version)
+            actions += [{"cdc": c} for c in (cdc_actions or [])]
             try:
-                os.link(tmp, target)  # atomic create-if-absent
-                os.remove(tmp)
-                self._maybe_checkpoint(attempt_version)
-                return attempt_version
-            except FileExistsError:
-                os.remove(tmp)
+                publish_commit(
+                    self.path,
+                    attempt_version,
+                    actions,
+                    operation,
+                    ts_ms=ts_ms,
+                    extra={
+                        "version": attempt_version,
+                        "readVersion": read_version,
+                        **(info_extra or {}),
+                    },
+                )
+            except ConcurrentCommitError:
                 if not blind_append:
                     raise ConcurrentWriteConflict(
                         f"{operation} read version {read_version} but "
@@ -2166,6 +2149,9 @@ class TxnTable:
                     if seen >= txn[1]:
                         return self.latest_version()
                 attempt_version = self.latest_version() + 1
+                continue
+            self._maybe_checkpoint(attempt_version)
+            return attempt_version
         raise ConcurrentWriteConflict(
             f"append lost {max_retries} publish races; giving up"
         )

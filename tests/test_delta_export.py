@@ -309,6 +309,53 @@ def test_sync_delta_export_mirrors_commits(spark, tmp_path):
         sync_delta_export(spark, src, t.path)
 
 
+def test_sync_never_clobbers_a_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Another writer takes the mirror's next version slot between
+    the sync's log listing and its publish (a stale listing): the sync
+    raises ConcurrentCommitError and the other commit stays
+    byte-identical."""
+    from data_lakehouse_project_spark.operators import delta_reader
+    from data_lakehouse_project_spark.operators.concurrency import (
+        ConcurrentCommitError,
+    )
+    from data_lakehouse_project_spark.operators.delta_export import (
+        sync_delta_export,
+    )
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "mirror")
+    t = TxnTable(src)
+    t.write(_batch(spark, 0, 4), mode="overwrite")          # v0
+    sync_delta_export(spark, src, out)
+    t.write(_batch(spark, 4, 6), mode="append")             # v1
+    sync_delta_export(spark, src, out)
+    taken = os.path.join(out, "_delta_log", f"{1:020d}.json")
+    with open(taken, "rb") as fh:
+        before = fh.read()
+
+    t.write(_batch(spark, 6, 8), mode="append")             # v2
+    real = delta_reader._commit_versions
+
+    def stale(path):
+        vs = real(path)
+        return vs[:-1] if os.path.samefile(path, out) else vs
+
+    monkeypatch.setattr(delta_reader, "_commit_versions", stale)
+    with pytest.raises(ConcurrentCommitError, match="concurrent commit"):
+        sync_delta_export(spark, src, out)
+    monkeypatch.undo()
+    with open(taken, "rb") as fh:
+        assert fh.read() == before
+    assert sorted(
+        os.listdir(os.path.join(out, "_delta_log"))
+    ) == [f"{0:020d}.json", f"{1:020d}.json"]
+    # the next sync (fresh listing) mirrors v2 on top
+    assert sync_delta_export(spark, src, out)["synced_commits"] == 1
+    assert _rows(read_delta_table(spark, out)) == _rows(t.read(spark))
+
+
 def test_sync_schema_evolution_keeps_table_id(spark, tmp_path):
     """A synced schema-change commit re-emits metaData with the SAME
     table id (spec: metaData.id identifies the table for the log's
@@ -468,7 +515,7 @@ def test_foreign_checkpoint_preserves_row_tracking(spark, tmp_path):
     assert sorted(r._row_id for r in got.collect()) == [40, 41, 42]
 
 
-def test_foreign_checkpoint_v2_gating_and_txn_refusal(spark, tmp_path):
+def test_foreign_checkpoint_v2_gating_and_txn_rows(spark, tmp_path):
     from data_lakehouse_project_spark.operators.delta_export import (
         write_foreign_checkpoint,
     )
@@ -486,10 +533,40 @@ def test_foreign_checkpoint_v2_gating_and_txn_refusal(spark, tmp_path):
     info = write_foreign_checkpoint(out2, kind="v2")
     assert info["kind"] == "v2" and info["files"] >= 1
 
-    # setTransaction would be silently lost -> refused
-    with open(os.path.join(out1, "_delta_log", f"{0:020d}.json"),
-              "a") as fh:
-        fh.write(json.dumps(
-            {"txn": {"appId": "x", "version": 1}}) + "\n")
-    with pytest.raises(DeltaExportError, match="setTransaction"):
-        write_foreign_checkpoint(out1)
+    # setTransaction rows ride into both checkpoint kinds, so
+    # idempotent-writer dedup survives log cleaning
+    for out, kind in ((out1, "classic"), (out2, "v2")):
+        log = os.path.join(out, "_delta_log")
+        with open(os.path.join(log, f"{1:020d}.json"), "w") as fh:
+            fh.write(json.dumps(
+                {"txn": {"appId": "x", "version": 1}}) + "\n")
+        assert write_foreign_checkpoint(out, kind=kind)["version"] == 1
+        for v in (0, 1):
+            os.remove(os.path.join(log, f"{v:020d}.json"))
+        assert read_delta_snapshot(out).txns == {"x": 1}, kind
+
+
+def test_foreign_checkpoint_keeps_streaming_txns(spark, tmp_path):
+    """write_foreign_checkpoint on a TxnTable.streaming_append table:
+    the exactly-once ``txn`` versions read the same once every commit
+    the checkpoint covers is log-cleaned."""
+    from data_lakehouse_project_spark.operators.delta_export import (
+        write_foreign_checkpoint,
+    )
+
+    t = TxnTable(str(tmp_path / "stream"))
+    sink_a = t.streaming_append("query-a")
+    sink_b = t.streaming_append("query-b")
+    sink_a(_batch(spark, 0, 2), 0)
+    sink_b(_batch(spark, 2, 4), 0)
+    sink_a(_batch(spark, 4, 6), 1)
+    sink_a(_batch(spark, 4, 6), 1)  # replayed micro-batch: no-op
+    sink_b(_batch(spark, 6, 8), 3)
+    assert t.latest_version() == 3  # fewer commits than the interval
+    want = read_delta_snapshot(t.path).txns
+    assert want == {"query-a": 1, "query-b": 3}
+
+    info = write_foreign_checkpoint(t.path)
+    for v in range(info["version"] + 1):
+        os.remove(os.path.join(t.path, "_delta_log", f"{v:020d}.json"))
+    assert read_delta_snapshot(t.path).txns == want

@@ -9,6 +9,9 @@ import time
 
 import pytest
 
+from data_lakehouse_project_spark.operators.concurrency import (
+    ConcurrentCommitError,
+)
 from data_lakehouse_project_spark.operators.foreign_maintenance import (
     expire_iceberg_snapshots,
     vacuum_delta,
@@ -329,7 +332,7 @@ def test_expire_iceberg_refuses_concurrent_commit(spark, tmp_path):
         for dp, _, fs in os.walk(path)
         for f in fs
     )
-    with pytest.raises(RuntimeError, match="concurrent commit"):
+    with pytest.raises(ConcurrentCommitError, match="concurrent commit"):
         expire_iceberg_snapshots(spark, path, keep_last=1, dry_run=False)
     after = sorted(
         os.path.join(dp, f)
